@@ -1,8 +1,6 @@
 from .cells import (  # noqa: F401
-    point_cell,
     cell_round,
     cell_string,
-    cell_tuple,
     common_agg,
     bbox_intersects,
     contains_xy,

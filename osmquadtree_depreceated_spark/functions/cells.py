@@ -26,13 +26,6 @@ def _sql_of(col) -> str:
     return str(col)
 
 
-def point_cell(lon, lat, level: int = 18) -> Column:
-    """Depth-`level` cell key for fixed-point point coords — closed-form
-    native expression (mirror of qtcore.point_cells_closed_form; semantics of
-    /root/reference/quadtree/quadtree.go:44-113 for point boxes)."""
-    return F.expr(sqlgen.point_cell_sql(SPARK, _sql_of(lon), _sql_of(lat), level))
-
-
 def cell_round(cell, level: int) -> Column:
     """Parent cell at `level` (quadtree.go:206-213)."""
     return F.expr(sqlgen.cell_round_sql(SPARK, _sql_of(cell), level))
@@ -43,17 +36,11 @@ def cell_string(cell, max_depth: int = 18) -> Column:
     return F.expr(sqlgen.cell_string_sql(SPARK, _sql_of(cell), max_depth))
 
 
-def cell_tuple(cell) -> dict:
-    """Cell key -> {'x','y','z'} slippy-tile Columns (quadtree.go:181-203)."""
-    exprs = sqlgen.cell_tuple_sql(SPARK, _sql_of(cell))
-    return {k: F.expr(v) for k, v in exprs.items()}
-
-
 def common_agg(cell) -> list:
     """Partial aggregates for the distributed Common-ancestor fold: three
-    native aggregates over non-null cells.  Combine with `common_finish`
-    column names in a subsequent select.  Associative + commutative, so
-    map-side partial aggregation applies (SURVEY.md §7.4)."""
+    native aggregates over non-null cells, finished by `with_common_finish`
+    in a subsequent projection.  Associative + commutative, so map-side
+    partial aggregation applies (SURVEY.md §7.4)."""
     c = _sql_of(cell)
     valid = f"(case when ({c}) >= 0 then ({c}) end)"
     return [
@@ -63,24 +50,17 @@ def common_agg(cell) -> list:
     ]
 
 
-def common_finish(min_col: str = "_common_min", max_col: str = "_common_max",
-                  mind_col: str = "_common_mind") -> Column:
-    """Finishing expression over the three partial aggregates; NULL (no
-    non-null input cells) propagates, mirroring Common's Null identity
-    (quadtree.go:216-221)."""
-    return F.expr(sqlgen.common_finish_sql(SPARK, min_col, max_col, mind_col))
-
-
 # ----------------------------------------------------------------------
-# Stepped (chained-withColumn) variants — the HOT-PATH forms.
+# Stepped (chained-withColumn) builders — the HOT-PATH forms.
 #
-# The single-expression builders above duplicate subtrees (each Morton
-# spread/compact step references its input twice -> 2^5 copies of the base
-# expression; codegen subexpression elimination does not reliably collapse
-# them, measured ~6x slowdown on the rollup stage).  The stepped variants
-# materialize each step as an intermediate column, so every step is
-# computed exactly once per row.  CollapseProject keeps them separate
-# because each intermediate is non-cheap and referenced more than once.
+# Written as one expression, the Morton spread/compact steps reference
+# their input twice each -> 2^5 copies of the base expression; codegen
+# subexpression elimination does not reliably collapse them (measured ~6x
+# slowdown on the rollup stage).  These builders materialize each step as
+# an intermediate column, so every step is computed exactly once per row.
+# CollapseProject keeps them separate because each intermediate is
+# non-cheap and referenced more than once.  The single-expression SQL of
+# the same functions lives in oracle/sqlgen.py for the DuckDB oracles.
 # ----------------------------------------------------------------------
 
 _SPREAD_STEPS = [
@@ -100,19 +80,15 @@ _COMPACT_STEPS = [
 
 
 def with_point_cell(df, lon: str, lat: str, out: str = "cell",
-                    level: int = 18, exact_merc: bool = False):
+                    level: int = 18):
     """Append a depth-`level` point-cell column via stepped native
-    expressions (semantics identical to point_cell / qtcore
-    point_cells_closed_form).
+    expressions (semantics of qtcore point_cells_closed_form).
 
-    Mercator note: the default computes merc(lat) with JVM ln/tan.  JVM Math
-    and C libm agree to within 1 ulp; a 1-ulp difference can flip the
-    depth-18 floor ONLY for latitudes whose merc-y lies within ~2^-52 of a
-    tile edge (measured zero occurrences on the gate fixtures; bounded
-    divergence documented in COVERAGE.md).  exact_merc=True routes the one
-    merc value per row through the same NumPy-libm Arrow UDF the bbox
-    descent uses (functions/udfs.merc_norm_udf), making point cells
-    bit-identical to the kernel/oracle path at the cost of one tiny UDF."""
+    Mercator note: merc(lat) is computed with JVM ln/tan.  JVM Math and C
+    libm agree to within 1 ulp; a 1-ulp difference can flip the depth-18
+    floor ONLY for latitudes whose merc-y lies within ~2^-52 of a tile edge
+    (measured zero occurrences on the gate fixtures; bounded divergence
+    documented in COVERAGE.md)."""
     n = 1 << level
     t = f"__pc_{out}"
     df = df.withColumn(
@@ -121,29 +97,14 @@ def with_point_cell(df, lon: str, lat: str, out: str = "cell",
             f"least(greatest(cast(floor((({lon}) * 1e-7 / 180e0 + 1e0)"
             f" / 2e0 * {n}e0) as bigint), 0), {n - 1})"
         ),
+    ).withColumn(
+        f"{t}_ys",
+        F.expr(
+            f"{n - 1} - least(greatest(cast(floor(((ln(tan(pi() * (1e0 + "
+            f"({lat}) * 1e-7 / 90e0) / 4e0)) * 90e0 / pi() / 90e0) + 1e0)"
+            f" / 2e0 * {n}e0) as bigint), 0), {n - 1})"
+        ),
     )
-    if exact_merc:
-        from .udfs import merc_norm_udf
-
-        mn = merc_norm_udf()
-        df = df.withColumn(
-            f"{t}_my", mn(F.expr(f"cast({lat} as bigint)"), F.lit(False))
-        ).withColumn(
-            f"{t}_ys",
-            F.expr(
-                f"{n - 1} - least(greatest(cast(floor((({t}_my) + 1e0)"
-                f" / 2e0 * {n}e0) as bigint), 0), {n - 1})"
-            ),
-        )
-    else:
-        df = df.withColumn(
-            f"{t}_ys",
-            F.expr(
-                f"{n - 1} - least(greatest(cast(floor(((ln(tan(pi() * (1e0 + "
-                f"({lat}) * 1e-7 / 90e0) / 4e0)) * 90e0 / pi() / 90e0) + 1e0)"
-                f" / 2e0 * {n}e0) as bigint), 0), {n - 1})"
-            ),
-        )
     for src in ("xt", "ys"):
         cur = f"{t}_{src}"
         for shift, mask in _SPREAD_STEPS:
@@ -166,7 +127,7 @@ def with_point_cell(df, lon: str, lat: str, out: str = "cell",
 
 def with_cell_tuple(df, cell: str, prefix: str = "tile_"):
     """Append slippy `{prefix}x/y/z` columns for a cell column via stepped
-    native expressions (semantics of cell_tuple / quadtree.go:181-203)."""
+    native expressions (quadtree.go:181-203; -1 cells give -1 x/y/z)."""
     t = f"__ct_{prefix}"
     df = df.withColumn(f"{t}path",
                        F.expr(f"shiftright({cell}, 5) & 288230376151711743"))
@@ -214,8 +175,9 @@ def with_common_finish(df, out: str = "cell",
                        min_col: str = "_common_min",
                        max_col: str = "_common_max",
                        mind_col: str = "_common_mind"):
-    """Stepped form of common_finish: append `out` = Common over the three
-    partial-aggregate columns, then drop them."""
+    """Append `out` = Common over the three `common_agg` partial-aggregate
+    columns, then drop them.  NULL (no non-null input cells) propagates,
+    mirroring Common's Null identity (quadtree.go:216-221)."""
     t = "__cf"
     df = df.withColumn(f"{t}x", F.expr(f"{min_col} ^ {max_col}"))
     cur = f"{t}x"
@@ -245,155 +207,6 @@ def with_common_finish(df, out: str = "cell",
         *[c for c in df.columns if c.startswith(t)], min_col, max_col,
         mind_col
     )
-
-
-def with_cell_of_bbox(df, minx: str, miny: str, maxx: str, maxy: str,
-                      out: str = "cell", buffer: float = 0.05,
-                      max_level: int = 18, exact_merc: bool = True):
-    """Buffered bbox -> cell via stepped native expressions — the 18-level
-    recursive descent of the reference's Calculate (quadtree.go:44-113)
-    unrolled into chained withColumns, exactly like the DuckDB oracle CTE
-    (oracle/duck_calc.py) but evaluated by Tungsten.
-
-    The ONLY non-exactly-reproducible operations are the two initial
-    mercator transforms (ln/tan): JVM Math and C libm may differ by 1 ulp,
-    and the descent's per-level x2 rescaling amplifies that to ~2.6e-11 by
-    depth 18 — enough to flip a deep quadrant on ~1e-5 of rows (measured).
-    With exact_merc=True (default) those two values per row are computed by
-    a tiny Arrow UDF through NumPy's libm — bit-identical to the oracle
-    kernels — and ALL the arithmetic-heavy unrolled iteration stays native
-    (IEEE +,*,/ are correctly rounded, hence platform-identical).
-    exact_merc=False is the zero-Python variant for parity-insensitive uses
-    (partitioning hints).  Column count ~7 per level, dropped at the end.
-
-    All literals are emitted as DOUBLE (scientific notation / shortest-repr
-    constants): bare decimal literals parse as DECIMAL in Spark SQL, which
-    silently runs the whole x-coordinate chain in decimal arithmetic and
-    diverges from the float64 oracles on thin boxes.
-    """
-    t = "__cb"
-    df = (
-        df.withColumn(
-            f"{t}_invalid",
-            F.expr(
-                f"({minx} * 1e-7 > {maxx} * 1e-7) or "
-                f"({miny} * 1e-7 > {maxy} * 1e-7)"
-            ),
-        )
-        .withColumn(f"{t}_mx0", F.expr(f"({minx} * 1e-7) / 180e0"))
-        .withColumn(
-            f"{t}_hx0",
-            F.expr(
-                f"(case when {maxx} * 1e-7 = {minx} * 1e-7 "
-                f"then {maxx} * 1e-7 + 1e-7 "
-                f"else {maxx} * 1e-7 end) / 180e0"
-            ),
-        )
-    )
-    if exact_merc:
-        from .udfs import merc_norm_udf
-
-        mn = merc_norm_udf()
-        nudge = F.expr(f"{maxy} * 1e-7 = {miny} * 1e-7")
-        df = df.withColumn(
-            f"{t}_my0", mn(F.expr(f"cast({miny} as bigint)"), F.lit(False))
-        ).withColumn(
-            f"{t}_hy0", mn(F.expr(f"cast({maxy} as bigint)"), nudge)
-        )
-    else:
-        df = (
-            df.withColumn(
-                f"{t}_my0",
-                F.expr(
-                    f"(ln(tan(pi() * (1e0 + ({miny} * 1e-7) / 90e0)"
-                    f" / 4e0)) * 90e0 / pi()) / 90e0"
-                ),
-            )
-            .withColumn(
-                f"{t}_hy0",
-                F.expr(
-                    f"(ln(tan(pi() * (1e0 + (case when {maxy} * 1e-7 = "
-                    f"{miny} * 1e-7 then {maxy} * 1e-7 + 1e-7 "
-                    f"else {maxy} * 1e-7 end) / 90e0) / 4e0))"
-                    f" * 90e0 / pi()) / 90e0"
-                ),
-            )
-        )
-    df = df.withColumn(f"{t}_res0", F.expr("cast(0 as bigint)")).withColumn(
-        f"{t}_done0", F.lit(False)
-    )
-    # buffer-derived comparison constants precomputed in Python float64 and
-    # emitted as round-trip-exact string casts, so the native comparisons
-    # use the EXACT doubles the NumPy kernel uses
-    bf = float(buffer)
-    B = f"cast('{bf!r}' as double)"
-    NB = f"cast('{(-bf)!r}' as double)"
-    LO = f"cast('{(-1.0 - bf)!r}' as double)"
-    HI = f"cast('{(1.0 + bf)!r}' as double)"
-    for cl in range(int(max_level)):
-        mx, hx = f"{t}_mx{cl}", f"{t}_hx{cl}"
-        my, hy = f"{t}_my{cl}", f"{t}_hy{cl}"
-        # ordered elif chain of findQuad (quadtree.go:62-86)
-        q = f"{t}_q{cl}"
-        df = df.withColumn(
-            q,
-            F.expr(
-                f"""case
-  when {mx} < {LO} or {my} < {LO} or {hx} > {HI} or {hy} > {HI}
-    then -1
-  when {hx} <= 0e0 and {my} >= 0e0 then 0
-  when {mx} >= 0e0 and {my} >= 0e0 then 1
-  when {hx} <= 0e0 and {hy} <= 0e0 then 2
-  when {mx} >= 0e0 and {hy} <= 0e0 then 3
-  when ({hx} < {B} and abs({hx}) < abs({mx}))
-   and ({my} > {NB} and abs({hy}) >= abs({my})) then 0
-  when ({mx} > {NB} and abs({hx}) >= abs({mx}))
-   and ({my} > {NB} and abs({hy}) >= abs({my})) then 1
-  when ({hx} < {B} and abs({hx}) < abs({mx}))
-   and ({hy} < {B} and abs({hy}) < abs({my})) then 2
-  when ({mx} > {NB} and abs({hx}) >= abs({mx}))
-   and ({hy} < {B} and abs({hy}) < abs({my})) then 3
-  else -1 end"""
-            ),
-        )
-        xs, ys = f"{t}_xs{cl}", f"{t}_ys{cl}"
-        df = (
-            df.withColumn(
-                xs,
-                F.expr(
-                    f"case when {q} = 0 or {q} = 2 then 0.5e0 else -0.5e0 end"
-                ),
-            )
-            .withColumn(
-                ys,
-                F.expr(
-                    f"case when {q} = 2 or {q} = 3 then 0.5e0 else -0.5e0 end"
-                ),
-            )
-            .withColumn(
-                f"{t}_res{cl + 1}",
-                F.expr(
-                    f"case when not {t}_done{cl} and {q} >= 0 then "
-                    f"{t}_res{cl} + shiftleft(cast({q} as bigint),"
-                    f" {61 - 2 * cl}) + 1 else {t}_res{cl} end"
-                ),
-            )
-            .withColumn(
-                f"{t}_done{cl + 1}", F.expr(f"{t}_done{cl} or {q} < 0")
-            )
-            .withColumn(f"{t}_mx{cl + 1}", F.expr(f"({mx} + {xs}) * 2e0"))
-            .withColumn(f"{t}_hx{cl + 1}", F.expr(f"({hx} + {xs}) * 2e0"))
-            .withColumn(f"{t}_my{cl + 1}", F.expr(f"({my} + {ys}) * 2e0"))
-            .withColumn(f"{t}_hy{cl + 1}", F.expr(f"({hy} + {ys}) * 2e0"))
-        )
-    df = df.withColumn(
-        out,
-        F.expr(
-            f"case when {t}_invalid then cast(-1 as bigint) "
-            f"else {t}_res{int(max_level)} end"
-        ),
-    )
-    return df.drop(*[c for c in df.columns if c.startswith(t)])
 
 
 def bbox_intersects(a: dict, b: dict) -> Column:

@@ -1,8 +1,11 @@
 """Arrow-vectorized pandas UDFs wrapping the qtcore NumPy kernels.
 
-Used only where the semantics are inherently iterative (the buffered
-quadtree descent) or data-dependent (polygon membership against a broadcast
-polygon).  Everything batch-shaped; no per-row Python.
+Used only where the semantics are inherently iterative or data-dependent:
+`cell_of_bbox_udf` is the engine's one buffered quadtree descent (way,
+node-fallback, update and geometry cells all go through it),
+`point_in_poly_udf` tests membership against a broadcast polygon, and
+`cell_bounds_udf` maps a cell back to its box.  Everything batch-shaped;
+no per-row Python.
 """
 
 from __future__ import annotations
@@ -51,25 +54,6 @@ def point_in_poly_udf(poly_lons, poly_lats):
         return pd.Series(got)
 
     return _pip
-
-
-def merc_norm_udf():
-    """Tiny Arrow UDF: fixed-point lat -> merc(lat_degrees)/90 through
-    NumPy's libm, with the reference's degenerate-box nudge (+1e-7 deg when
-    `nudge`).  Exists so the native unrolled cell descent
-    (functions.cells.with_cell_of_bbox) starts from mercator values that
-    are bit-identical to the oracle kernels — the descent's remaining
-    arithmetic is correctly-rounded IEEE and therefore platform-identical.
-    """
-    from ..qtcore.quadtree import merc, to_float
-
-    @F.pandas_udf("double")
-    def _mn(lat: pd.Series, nudge: pd.Series) -> pd.Series:
-        deg = to_float(lat.to_numpy(np.int64))
-        deg = np.where(nudge.to_numpy(bool), deg + 0.0000001, deg)
-        return pd.Series(merc(deg) / 90.0)
-
-    return _mn
 
 
 _BOUNDS_SCHEMA = StructType(

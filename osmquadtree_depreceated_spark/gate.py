@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .functions.cells import (
     cell_round,
     cell_string,
-    point_cell,
     with_cell_tuple,
     with_point_cell,
 )
@@ -401,8 +400,8 @@ def q11_span_roundtrip(spark, sf_dir) -> DataFrame:
     from .sources.docs import parse_spans
 
     nodes = parse_spans(docs)["nodes"]
-    cells = nodes.select(
-        "doc_id", "lon", "lat", point_cell("lon", "lat", 18).alias("cell")
+    cells = with_point_cell(
+        nodes.select("doc_id", "lon", "lat"), "lon", "lat", "cell", 18
     )
     keep = cells.filter(
         (F.col("lon") >= -6000000) & (F.col("lon") <= 2000000)
@@ -1869,8 +1868,8 @@ from px"""
 
 def q31_node_parent(spark, sf_dir) -> DataFrame:
     """Node inherits the highway value from its max-z-order parent way —
-    with the z-order COMPUTED from the REWRITTEN way tags, composing
-    with_tag_rewrite + with_zorder into AddNodeParent exactly as the
+    with the z-order COMPUTED from the REWRITTEN way tags (with_tag_rewrite's
+    z_order column), composed into AddNodeParent exactly as the
     reference chains them (FindParentHighway picks the parent by the
     way's computed z-order, nodeparent.go:13-26, zorder.go:242-279).
     The oracle re-derives the same z-order arithmetically in SQL."""

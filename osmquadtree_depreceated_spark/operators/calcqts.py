@@ -19,12 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.cells import (
-    common_agg,
-    common_finish,
-    with_cell_of_bbox,
-    with_common_finish,
-)
+from ..functions.cells import common_agg, with_common_finish
 from ..functions.udfs import cell_of_bbox_udf
 
 
@@ -77,33 +72,11 @@ def way_bboxes(way_refs: DataFrame, nodes: DataFrame,
     return j.groupBy("way_id").agg(*aggs)
 
 
-def cells_of_bboxes(df: DataFrame, buffer: float, max_level: int,
-                    out: str = "cell") -> DataFrame:
-    """Buffered-cell computation over (minx,miny,maxx,maxy) via the
-    Arrow-vectorized NumPy kernel — the measured-fastest exact path.
-
-    (An unrolled native-expression descent exists —
-    functions.cells.with_cell_of_bbox — and is bit-identical when seeded
-    with exact_merc, but its ~130 chained expressions exceed the 64KB
-    whole-stage-codegen limit and fall back to interpreted evaluation,
-    measured ~4x slower end-to-end than this kernel.  Kept as an option for
-    environments without Python workers.)"""
-    calc = cell_of_bbox_udf(buffer, max_level)
-    return df.withColumn(out, calc("minx", "miny", "maxx", "maxy"))
-
-
 def way_cells(way_bbox: DataFrame, buffer: float = 0.05,
-              max_level: int = 18, native: bool = False) -> DataFrame:
-    """Buffered cell per way bbox (resortwaynodes.go:615,:621-625).
-
-    Default: the Arrow NumPy kernel (fastest exact path, see
-    cells_of_bboxes).  native=True switches to the unrolled in-JVM descent
-    with exact_merc seeding — same results, slower (codegen size limit)."""
-    if native:
-        return with_cell_of_bbox(
-            way_bbox, "minx", "miny", "maxx", "maxy", "cell", buffer,
-            max_level, exact_merc=True,
-        ).select("way_id", "cell")
+              max_level: int = 18) -> DataFrame:
+    """Buffered cell per way bbox (resortwaynodes.go:615,:621-625), computed
+    by the engine's one cell descent: the Arrow-vectorized NumPy kernel
+    behind functions.udfs.cell_of_bbox_udf."""
     calc = cell_of_bbox_udf(buffer, max_level)
     return way_bbox.select(
         "way_id", calc("minx", "miny", "maxx", "maxy").alias("cell")
@@ -111,15 +84,15 @@ def way_cells(way_bbox: DataFrame, buffer: float = 0.05,
 
 
 def node_cells(nodes: DataFrame, way_refs: DataFrame, wcells: DataFrame,
-               buffer: float = 0.05, max_level: int = 18,
-               native: bool = True) -> DataFrame:
+               buffer: float = 0.05, max_level: int = 18) -> DataFrame:
     """Node cell = Common over parent-way cells, falling back to the node's
     own point-box cell Calculate((lon,lat,lon+1,lat+1), buffer, 18)
     (resortwaynodes.go:696-709).
 
     The Common fold runs as three native min/max aggregates plus a bit-math
     finish (SURVEY.md §7.4) — associative, so map-side partials absorb hot
-    nodes.  The fallback descent is fully native when native=True.
+    nodes.  The point-box fallback runs through the same cell descent as
+    way_cells (functions.udfs.cell_of_bbox_udf).
     """
     parent = with_common_finish(
         way_refs.join(wcells, "way_id").groupBy("ref").agg(*common_agg("cell")),

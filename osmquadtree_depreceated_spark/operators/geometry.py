@@ -81,15 +81,20 @@ def with_tag_rewrite(df: DataFrame, which: str = "way",
                        iteration order), layer*10, bridge/tunnel +/-1,
                        explicit z_order override
 
-    All hot-path columns are pure Catalyst expressions (stepped
-    withColumns).  JSON escaping: the native fold emits values verbatim,
-    which equals json.dumps output only for printable-ASCII payloads
-    without " or \\.  Rows whose folded keys/values fall outside that set
-    are detected natively (one rlike over the fold entries) and routed
-    through an Arrow-batched json.dumps fallback — the UDF receives NULL
-    for every safe row, so arbitrary payloads are always well-formed JSON
-    while the common case stays JVM-side.  Scalar reference:
-    qtcore/tags.py (property-tested parity).
+    All hot-path columns are pure Catalyst expressions: ONE packed struct
+    holds every value derived from the input map, and exactly two
+    projection layers sit above it.  Do not re-step it into chained
+    withColumns — that brings back the measured 17x CollapseProject
+    inlining of the tags expression (see the comments below).
+
+    JSON escaping: the native fold emits values verbatim, which equals
+    json.dumps output only for printable-ASCII payloads without " or \\.
+    Rows whose folded keys/values fall outside that set are detected
+    natively (one rlike over the fold entries) and routed through an
+    Arrow-batched json.dumps fallback — the UDF receives NULL for every
+    safe row, so arbitrary payloads are always well-formed JSON while the
+    common case stays JVM-side.  Scalar reference: qtcore/tags.py
+    (property-tested parity).
     """
     from ..qtcore.tags import DEFAULT_TAG_FILTER
 
@@ -207,9 +212,13 @@ def with_tag_rewrite(df: DataFrame, which: str = "way",
 
 
 def _zorder_sql(kept: str) -> str:
-    """find_zorder (zorder.go:60-119) as ONE SQL expression over a cheap
-    map reference (same semantics as the stepped with_zorder below, which
-    remains for callers whose tags column is a plain attribute)."""
+    """find_zorder (zorder.go:60-119 — exact semantics, order-independent)
+    as ONE SQL expression over a cheap map reference: zo = max(highway rank
+    if > 1, 5 if railway, 0); l = sum(int(layer)) +1/-1 for bridge/tunnel
+    unless explicitly false; an explicit z_order tag replaces zo
+    (unparseable -> 0 outright); l*10 added last.  The rank table is a map
+    literal, no UDF (scalar reference: qtcore.rings.find_zorder).  A NULL
+    map gives 0, like an empty one."""
     hw = ", ".join(
         f"'{k}', {v}L" for k, v in sorted(R.HIGHWAY_ORDER.items())
     )
@@ -237,61 +246,6 @@ def _zorder_sql(kept: str) -> str:
         f" + ({l}) * 10 end) "
         f"else {base} + ({l}) * 10 end"
     )
-
-
-def with_zorder(df: DataFrame, tags_col: str = "tags",
-                out: str = "z_order", tmp: str = "__zo") -> DataFrame:
-    """Native z-order (find_zorder, zorder.go:60-119 — exact semantics,
-    order-independent): zo = max(highway rank if > 1, 5 if railway, 0);
-    l = sum(int(layer)) +1/-1 for bridge/tunnel unless explicitly false;
-    an explicit z_order tag replaces zo (unparseable -> 0 outright); l*10
-    added last.  The 20-entry rank table is a map literal — one broadcast
-    value, no UDF (scalar reference: qtcore.rings.find_zorder)."""
-    t = tmp
-    tc = tags_col
-    hw = ", ".join(
-        f"'{k}', {v}L" for k, v in sorted(R.HIGHWAY_ORDER.items())
-    )
-    df = (
-        df.withColumn(
-            f"{t}_hw",
-            F.expr(f"coalesce(element_at(map({hw}),"
-                   f" element_at({tc}, 'highway')), 0L)"),
-        )
-        .withColumn(
-            f"{t}_base",
-            F.expr(
-                f"greatest(case when {t}_hw > 1 then {t}_hw else 0L end, "
-                f"case when element_at({tc}, 'railway') is not null "
-                f"then 5L else 0L end)"
-            ),
-        )
-        .withColumn(
-            f"{t}_l",
-            F.expr(
-                f"coalesce(try_cast(element_at({tc}, 'layer') as bigint),"
-                f" 0L) "
-                f"+ (case when element_at({tc}, 'bridge') is not null and "
-                f"not lower(element_at({tc}, 'bridge')) in ('0','no','false')"
-                f" then 1L else 0L end) "
-                f"- (case when element_at({tc}, 'tunnel') is not null and "
-                f"not lower(element_at({tc}, 'tunnel')) in ('0','no','false')"
-                f" then 1L else 0L end)"
-            ),
-        )
-        .withColumn(
-            out,
-            F.expr(
-                f"case when coalesce(element_at({tc}, 'z_order'), '') != ''"
-                f" then (case when try_cast(element_at({tc}, 'z_order')"
-                f" as bigint) is null then 0L else"
-                f" try_cast(element_at({tc}, 'z_order') as bigint)"
-                f" + {t}_l * 10 end) "
-                f"else {t}_base + {t}_l * 10 end"
-            ),
-        )
-    )
-    return df.drop(*[c for c in df.columns if c.startswith(t)])
 
 
 def make_node_geometries(nodes_with_tags: DataFrame,

@@ -85,9 +85,7 @@ def test_partitioned_bucketed_composes(base, tmp_path):
     and an id-join against a same-bucket-count side with zero Exchange.
     Values must equal the plain recomputation over the pruned subset."""
     from osmquadtree_depreceated_spark.functions.cells import cell_round
-    from osmquadtree_depreceated_spark.operators.calcqts import (
-        cells_of_bboxes,
-    )
+    from osmquadtree_depreceated_spark.functions.udfs import cell_of_bbox_udf
     from osmquadtree_depreceated_spark.plans.bucketed import (
         write_partitioned_bucketed,
     )
@@ -95,15 +93,11 @@ def test_partitioned_bucketed_composes(base, tmp_path):
     spark = base
     # a cell-keyed element table: node point-box cells, rounded to the
     # level-6 partition key
-    nc = cells_of_bboxes(
-        spark.table("nodes").select(
-            "node_id", F.col("lon").alias("minx"),
-            F.col("lat").alias("miny"),
-            (F.col("lon") + 1).alias("maxx"),
-            (F.col("lat") + 1).alias("maxy")),
-        0.05, 18,
-    ).select("node_id", "cell").withColumn(
-        "part_cell", cell_round("cell", 6))
+    calc = cell_of_bbox_udf(0.05, 18)
+    nc = spark.table("nodes").select(
+        "node_id",
+        calc("lon", "lat", F.col("lon") + 1, F.col("lat") + 1).alias("cell"),
+    ).withColumn("part_cell", cell_round("cell", 6))
     write_partitioned_bucketed(nc, "hyb_nodes", str(tmp_path / "hyb"),
                                "part_cell", "node_id", 8)
     # a change feed bucketed the same way on the join key

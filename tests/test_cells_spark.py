@@ -10,12 +10,14 @@ from osmquadtree_depreceated_spark.functions import (
     cell_of_bbox_udf,
     cell_round,
     cell_string,
-    cell_tuple,
     common_agg,
-    point_cell,
     point_in_poly_udf,
 )
-from osmquadtree_depreceated_spark.functions.cells import common_finish
+from osmquadtree_depreceated_spark.functions.cells import (
+    with_cell_tuple,
+    with_common_finish,
+    with_point_cell,
+)
 from osmquadtree_depreceated_spark.qtcore import (
     calculate_cells,
     cells_to_strings,
@@ -41,22 +43,7 @@ def coords_df(spark):
 def test_point_cell_native_matches_numpy(coords_df):
     df, pdf = coords_df
     got = (
-        df.select("id", point_cell("lon", "lat", 18).alias("cell"))
-        .orderBy("id")
-        .toPandas()
-    )
-    want = point_cells_closed_form(pdf["lon"].values, pdf["lat"].values, 18)
-    np.testing.assert_array_equal(got["cell"].values, want)
-
-
-def test_point_cell_exact_merc_matches_numpy(coords_df):
-    # the exact_merc variant routes merc(lat) through NumPy libm — always
-    # bit-identical to the kernel, including tile-edge-straddling latitudes
-    from osmquadtree_depreceated_spark.functions.cells import with_point_cell
-
-    df, pdf = coords_df
-    got = (
-        with_point_cell(df, "lon", "lat", "cell", 18, exact_merc=True)
+        with_point_cell(df, "lon", "lat", "cell", 18)
         .select("id", "cell")
         .orderBy("id")
         .toPandas()
@@ -67,7 +54,10 @@ def test_point_cell_exact_merc_matches_numpy(coords_df):
 
 def test_point_cell_is_codegen_native(coords_df):
     df, _ = coords_df
-    plan = df.select(point_cell("lon", "lat"))._jdf.queryExecution().executedPlan().toString()
+    plan = (
+        with_point_cell(df, "lon", "lat", "cell", 18)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
@@ -77,16 +67,18 @@ def test_cell_round_and_codecs(coords_df, spark):
         point_cells_closed_form(pdf["lon"].values, pdf["lat"].values, 18),
         RNG.integers(0, 19, len(pdf)),
     )
+    cells[::5000] = -1  # the reference's "no cell" sentinel
     cdf = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(cells)), "cell": cells}))
-    tup = cell_tuple("cell")
     got = (
-        cdf.select(
-            "i",
-            cell_round("cell", 11).alias("r11"),
-            cell_string("cell").alias("s"),
-            tup["x"].alias("x"),
-            tup["y"].alias("y"),
-            tup["z"].alias("z"),
+        with_cell_tuple(
+            cdf.select(
+                "i",
+                "cell",
+                cell_round("cell", 11).alias("r11"),
+                cell_string("cell").alias("s"),
+            ),
+            "cell",
+            prefix="",
         )
         .orderBy("i")
         .toPandas()
@@ -107,9 +99,9 @@ def test_common_agg_native(spark):
     grp = RNG.integers(0, 500, n)
     df = spark.createDataFrame(pd.DataFrame({"g": grp, "cell": cells}))
     got = (
-        df.groupBy("g")
-        .agg(*common_agg("cell"))
-        .select("g", common_finish().alias("common"))
+        with_common_finish(df.groupBy("g").agg(*common_agg("cell")),
+                           out="common")
+        .select("g", "common")
         .orderBy("g")
         .toPandas()
     )
@@ -151,77 +143,3 @@ def test_point_in_poly_udf(spark):
     got = df.select("i", pip("x", "y").alias("inside")).orderBy("i").toPandas()
     want = point_in_poly(np.array(poly_lon), np.array(poly_lat), tx, ty)
     np.testing.assert_array_equal(got["inside"].values, want)
-
-
-def test_native_descent_exact_merc_bit_identical_everywhere(spark):
-    # exact_merc=True: bit parity with the NumPy kernel on every box,
-    # degenerate/point boxes included, for multiple buffer/level configs
-    from osmquadtree_depreceated_spark.functions.cells import with_cell_of_bbox
-
-    n = 20000
-    minx = RNG.integers(-1800000000, 1790000000, n)
-    miny = RNG.integers(-850000000, 840000000, n)
-    w = RNG.integers(0, 10000000, n)
-    w[: n // 4] = RNG.integers(0, 3, n // 4)  # degenerate slice
-    h = RNG.integers(0, 10000000, n)
-    h[: n // 4] = RNG.integers(0, 3, n // 4)
-    maxx = minx + w
-    maxy = miny + h
-    pdf = pd.DataFrame(
-        {"id": np.arange(n), "minx": minx, "miny": miny, "maxx": maxx,
-         "maxy": maxy}
-    )
-    df = spark.createDataFrame(pdf)
-    for bf, lvl in [(0.05, 18), (0.025, 18), (0.0, 13)]:
-        got = (
-            with_cell_of_bbox(df, "minx", "miny", "maxx", "maxy", "cell",
-                              bf, lvl, exact_merc=True)
-            .select("id", "cell").orderBy("id").toPandas()
-        )
-        want = calculate_cells(minx, miny, maxx, maxy, bf, lvl)
-        np.testing.assert_array_equal(got["cell"].values, want)
-
-
-def test_native_descent_pure_jvm_near_exact(spark):
-    # exact_merc=False (zero Python): allowed to diverge only in deep
-    # digits on a <=1e-3 fraction of rows (JVM Math vs libm 1-ulp ln/tan)
-    from osmquadtree_depreceated_spark.functions.cells import with_cell_of_bbox
-
-    n = 20000
-    minx = RNG.integers(-1800000000, 1790000000, n)
-    miny = RNG.integers(-850000000, 840000000, n)
-    maxx = minx + RNG.integers(0, 10000000, n)
-    maxy = miny + RNG.integers(0, 10000000, n)
-    pdf = pd.DataFrame(
-        {"id": np.arange(n), "minx": minx, "miny": miny, "maxx": maxx,
-         "maxy": maxy}
-    )
-    df = spark.createDataFrame(pdf)
-    got = (
-        with_cell_of_bbox(df, "minx", "miny", "maxx", "maxy", "cell",
-                          0.05, 18, exact_merc=False)
-        .select("id", "cell").orderBy("id").toPandas()
-    )
-    want = calculate_cells(minx, miny, maxx, maxy, 0.05, 18)
-    assert (got["cell"].values != want).mean() <= 1e-3
-
-
-def test_native_bbox_descent_stays_jvm(spark):
-    from osmquadtree_depreceated_spark.functions.cells import with_cell_of_bbox
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"minx": [1], "miny": [2], "maxx": [3], "maxy": [4]})
-    )
-    plan = (
-        with_cell_of_bbox(df, "minx", "miny", "maxx", "maxy",
-                          exact_merc=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "EvalPython" not in plan
-    # exact_merc=True: the ONLY Python in the plan is the 2-value merc UDF
-    plan2 = (
-        with_cell_of_bbox(df, "minx", "miny", "maxx", "maxy",
-                          exact_merc=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan2.count("ArrowEvalPython") <= 1

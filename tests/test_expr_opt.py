@@ -2,16 +2,14 @@
 value-identical to the naive compositions they replaced.
 
 Covers functions/text.py (`_let` word-shingle binding, scores-struct label)
-and operators/geometry.py (`_zorder_sql` single expression vs the stepped
-with_zorder it bypasses inside with_tag_rewrite)."""
+and operators/geometry.py (`_zorder_sql`, the single z-order expression
+inside with_tag_rewrite, against the scalar qtcore.rings.find_zorder)."""
 
 from pyspark.sql import functions as F
 
 from osmquadtree_depreceated_spark.functions import text as T
-from osmquadtree_depreceated_spark.operators.geometry import (
-    _zorder_sql,
-    with_zorder,
-)
+from osmquadtree_depreceated_spark.operators.geometry import _zorder_sql
+from osmquadtree_depreceated_spark.qtcore.rings import find_zorder
 
 
 def _shingle_ref(text, k=3):
@@ -103,14 +101,11 @@ def test_zorder_single_expression_matches_stepped(spark):
         [(i, m) for i, m in enumerate(maps)],
         "row_id long, kept map<string,string>",
     )
-    stepped = {
-        r["row_id"]: r["z"]
-        for r in with_zorder(df, "kept", "z").select("row_id", "z").collect()
-    }
     single = {
         r["row_id"]: r["z"]
         for r in df.select(
             "row_id", F.expr(_zorder_sql("kept")).alias("z")
         ).collect()
     }
-    assert stepped == single
+    # a NULL map gives 0, the same as an empty one
+    assert single == {i: find_zorder(m or {}) for i, m in enumerate(maps)}

@@ -102,7 +102,7 @@ class TestRingAlgebra:
 
     def test_zorder_native_matches_scalar(self, spark):
         from osmquadtree_depreceated_spark.operators.geometry import (
-            with_zorder,
+            _zorder_sql,
         )
 
         cases = [
@@ -121,7 +121,9 @@ class TestRingAlgebra:
             "id long, tags map<string,string>",
         )
         got = {r["id"]: r["z_order"]
-               for r in with_zorder(df).collect()}
+               for r in df.select(
+                   "id", F.expr(_zorder_sql("tags")).alias("z_order")
+               ).collect()}
         for i, c in enumerate(cases):
             assert got[i] == R.find_zorder(c), c
 

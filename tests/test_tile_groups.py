@@ -119,6 +119,11 @@ class TestDistributedAssignment:
         hist = nodes.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
         groups = tile_groups_df(spark, hist, target=200, minimum=1)
         assigned = assign_groups(nodes, groups, "cell")
+        # the cell column is referenced once by the prefix explode, so the
+        # stepped with_point_cell chain is not inlined per depth (an
+        # unrolled prefix array gave a ~1.1M-char optimized plan)
+        plan = assigned._jdf.queryExecution().optimizedPlan().toString()
+        assert len(plan) < 50_000, len(plan)
         # every node gets exactly one group
         assert assigned.filter(F.col("group_cell").isNull()).count() == 0
         assert assigned.count() == nodes.count()
