@@ -1,96 +1,63 @@
 #!/usr/bin/env python
 """Benchmark harness.
 
-Runs the headline tile-assignment + spatial-join pipeline at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    python bench.py
+
+Runs the headline tile-assignment + spatial-join pipeline over the
+tables at $SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables) on the
+session qtbench/env.py sizes to the box (local[nproc], a sixteenth of RAM as
+driver heap, engine defaults otherwise) and prints ONE JSON line:
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+   "spark": {...}, "sf": ..., "cpus": ..., "box": {...},
+   "settings": {...}, "calibration": {...}}
 
 Methodology:
-  * every session runs one untimed warmup pipeline first (JIT/codegen/Arrow
-    buffers), then the timed pipeline — otherwise first-run JVM warmup
-    dominates and any scaling comparison is noise;
-  * the scaling-evidence runs (local[N] vs local[4N], same input — the
-    sandbox stand-in for N vs 4N executors, see BASELINE.md "Sandbox scaling
-    protocol") use an AMPLIFIED input (x$BENCH_AMPLIFY, default 8) so
-    per-task work dominates fixed task overhead the way it would at
-    production scale; both runs see the identical amplified input.
-Results land in BENCH/BASELINE.md.  Set BENCH_SKIP_SCALING=1 to skip the
-scaling runs.
+  * one untimed warmup pipeline first (JIT/codegen/Arrow buffers), then
+    the minimum of two timed pipelines; `value` is that pipeline's wall
+    time and `queries` holds its per-stage times;
+  * the serving-layout, ANN and geomblob side stages run once after it
+    and are not part of `value`;
+  * every stage runs inside a qtbench/tracing.py span, and Spark's event
+    log is folded into each stage's task time, task count and skew, GC,
+    shuffle bytes and rows handed to Python (`spark`);
+  * `calibration` is qtbench's line: a single-core busy-loop rate and the
+    median time of a zero-work Spark action, so a slow window on a shared
+    box shows itself.
+Everything the run writes stays under .bench_work (removed at exit).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "qtbench"))
+
+import env  # noqa: E402
+import tracing  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# round-4: 16 -> 32.  The per-stage breakdown (tools/scale_diag.py) fit
-# t = c + p/k to every stage: the pipeline carries ~4s of per-run serial
-# cost (Catalyst analysis, codegen, broadcast builds, commit) against
-# ~60s of parallel work at x16 — the fixed part alone caps 2->8
-# efficiency at ~0.74 even with every distributed stage scaling at
-# 0.9+.  Production per-task work dwarfs driver fixed cost by orders of
-# magnitude more than ANY sandbox input can; x32 is the smallest
-# amplification where the sandbox ratio stops lying about that.
-AMPLIFY = int(os.environ.get("BENCH_AMPLIFY", "32"))
-# N -> 4N scaling pair.  2 -> 8 rather than 8 -> 32: a pure-CPU calibration
-# (see _hw_ceiling) shows this box's per-core throughput drops ~32% going
-# 8 -> 32 workers (SMT / shared tenancy), capping even perfectly-parallel
-# code at ~0.68 efficiency there; 2 -> 8 has a ~0.73-0.9 hardware ceiling.
-SCALE_LOW = int(os.environ.get("BENCH_SCALE_LOW", "2"))
-SCALE_HIGH = 4 * SCALE_LOW
-_ID_OFFSET = 1_000_000_000
 
 
-def _session(cpus: int):
-    from pyspark.sql import SparkSession
+class Stages:
+    """Runs each bench stage inside a tracer span, so its Spark jobs are
+    charged to it, and keeps the stage's wall time."""
 
-    # Scaling probes (BENCH_SCALING_PROBE=1, set by _subprocess_probe)
-    # emulate "the same job on an N-core vs 4N-core cluster": SAME
-    # shuffle/input partition count at both levels — a production job is
-    # configured once for the big cluster and rerun unchanged, so the low
-    # level must run the identical task granularity, not a retuned
-    # smaller job.  (-XX:ActiveProcessorCount=<cpus> was tried as a
-    # further fidelity measure and REJECTED: it starves the low JVM's
-    # JIT/GC helper threads so hard the measured pair came out 1.17 —
-    # super-linear, i.e. non-physical over-constraint, not evidence.)
-    probe = os.environ.get("BENCH_SCALING_PROBE") == "1"
-    shuffle_parts = max((SCALE_HIGH if probe else cpus) * 2, 8)
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"osmquadtree-bench-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(shuffle_parts))
-        .config("spark.sql.adaptive.enabled", "true")
-        # At production scale AQE partition coalescing is desirable; at this
-        # sandbox input size it collapses KB-sized shuffles to 1-2 partitions
-        # and caps parallelism, so the scaling probe disables it (skew-join
-        # splitting stays on).
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        # Fact-fact joins at production scale are shuffle joins; at sandbox
-        # size they sneak under the 10MB auto-broadcast threshold and the
-        # serial broadcast build dominates.  Dimension tables (query boxes)
-        # still broadcast via explicit broadcast() hints.
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # bigger Arrow batches amortize Python-worker round-trips in the
-        # bbox-descent kernel (measured ~18% on the kernel-only portion at
-        # sf0.1; ~2 MB per in-flight batch for 4 int64 columns)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
-    )
-    s = b.getOrCreate()
-    from osmquadtree_depreceated_spark.conf import apply_engine_conf
+    def __init__(self, tr):
+        self.tr = tr
+        self.timings: dict = {}
 
-    apply_engine_conf(s)
-    return s
+    def __call__(self, name, thunk):
+        with self.tr.span(name):
+            t = time.perf_counter()
+            out = thunk()
+            self.timings[name] = round(time.perf_counter() - t, 3)
+        return out
 
 
 def _force(df):
@@ -98,36 +65,20 @@ def _force(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def _inputs(spark, sf_dir: str, amplify: int = 1):
-    """Synthesized nodes/way_refs, optionally replicated `amplify` times
-    with disjoint id spaces (identical coordinate distribution — same skew
-    profile, more rows)."""
-    from pyspark.sql import functions as F
-
+def _inputs(spark, sf_dir: str):
+    """Synthesized nodes/way_refs, two partitions per core."""
     from osmquadtree_depreceated_spark.sources import tpch
 
     tpch.load_base_tables(spark, sf_dir)
     tpch.register_synth_views(spark)
-    nodes = spark.table("nodes")
-    way_refs = spark.table("way_refs")
-    if amplify > 1:
-        reps = spark.range(amplify).withColumnRenamed("id", "rep")
-        nodes = nodes.crossJoin(reps).select(
-            (F.col("node_id") + F.col("rep") * _ID_OFFSET).alias("node_id"),
-            "lon", "lat",
-        )
-        way_refs = way_refs.crossJoin(reps).select(
-            (F.col("way_id") + F.col("rep") * _ID_OFFSET).alias("way_id"),
-            "pos",
-            (F.col("ref") + F.col("rep") * _ID_OFFSET).alias("ref"),
-        )
     # The sandbox parquet is a single file (1-2 splits); a production table
-    # has thousands of splits.  Emulate that so scans parallelize.
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return nodes.repartition(n_parts), way_refs.repartition(n_parts)
+    # has thousands of splits.  Spread it so scans use every core.
+    n_parts = 2 * spark.sparkContext.defaultParallelism
+    return (spark.table("nodes").repartition(n_parts),
+            spark.table("way_refs").repartition(n_parts))
 
 
-def run_pipeline(spark, nodes, way_refs, boxes_rows, timings: dict | None):
+def run_pipeline(spark, nodes, way_refs, boxes_rows, stage: Stages):
     """Flagship: point cells -> salted way bboxes -> buffered way cells ->
     node Common fold -> query-bbox join -> z12 raster rollup."""
     from pyspark.sql import functions as F
@@ -144,14 +95,7 @@ def run_pipeline(spark, nodes, way_refs, boxes_rows, timings: dict | None):
         raster_vector_join,
     )
 
-    def _stage(name, thunk):
-        t = time.time()
-        out = thunk()
-        if timings is not None:
-            timings[name] = round(time.time() - t, 3)
-        return out
-
-    _stage(
+    stage(
         "point_cells_native",
         lambda: _force(
             with_point_cell(nodes, "lon", "lat", "cell", 18)
@@ -166,17 +110,17 @@ def run_pipeline(spark, nodes, way_refs, boxes_rows, timings: dict | None):
     wb = way_bboxes(way_refs, nodes, salt_buckets=0).cache()
     wc = way_cells(wb, 0.05, 18)
     wc.cache()
-    n_ways = _stage("way_cells", wc.count)
+    n_ways = stage("way_cells", wc.count)
 
-    _stage(
+    stage(
         "node_common_fold",
         lambda: _force(node_cells(nodes, way_refs, wc, 0.05, 18)),
     )
 
     boxes = spark.createDataFrame(boxes_rows, gate.BOX_COLS)
     geoms = wc.join(wb, "way_id")
-    _stage("geoms_materialize", lambda: _force(geoms))
-    _stage(
+    stage("geoms_materialize", lambda: _force(geoms))
+    stage(
         "bbox_join_raster_rollup",
         lambda: _force(
             raster_vector_join(bbox_join(boxes, geoms), 12)
@@ -189,70 +133,9 @@ def run_pipeline(spark, nodes, way_refs, boxes_rows, timings: dict | None):
     return n_ways
 
 
-def _timed_run(cpus: int, amplify: int) -> tuple[dict, float, int]:
-    """One session: warmup pipeline, then timed pipeline.  Returns
-    (stage timings, elements, pipeline seconds)."""
-    from osmquadtree_depreceated_spark import gate
-
-    spark = _session(cpus)
-    try:
-        nodes, way_refs = _inputs(spark, SF_DIR, amplify)
-        nodes.cache()
-        way_refs.cache()
-        n_nodes = nodes.count()
-        n_refs = way_refs.count()
-        run_pipeline(spark, nodes, way_refs, gate.QUERY_BOXES, None)  # warmup
-        # Self-calibration (round-5): every headline run carries its own
-        # noise floor so a uniformly-inflated window (box contention during
-        # the driver's run) is distinguishable from a real regression by
-        # anyone reading the one JSON line.  Two code-independent probes:
-        #   calib_trivial_job_s — a zero-work Spark action (pure per-action
-        #     serial cost: scheduling + commit); tracks JVM/driver health.
-        #   calib_cpu_kops — single-process Python busy-loop rate; tracks
-        #     instantaneous free CPU on this shared box.
-        # Interpretation rule (BENCH/BASELINE.md): compare against the
-        # quiet-box reference values recorded there — if the headline
-        # regressed but calib moved by a similar factor, the window is
-        # environmental, not an engine change.
-        calib_jobs = []
-        for _ in range(3):
-            t0 = time.time()
-            _force(spark.range(8).repartition(8))
-            calib_jobs.append(time.time() - t0)
-        calib_jobs.sort()
-        timings0 = {
-            "calib_trivial_job_s": round(calib_jobs[1], 3),  # median of 3
-            "calib_cpu_kops": round(_burn(0.5) / 0.5 / 1000, 1),
-        }
-        # min of 2 timed pipelines: this is a shared box and a single run
-        # can land on a contention burst (per BASELINE.md methodology)
-        best_secs, timings = None, {}
-        for _ in range(2):
-            t: dict = {}
-            t0 = time.time()
-            n_ways = run_pipeline(spark, nodes, way_refs, gate.QUERY_BOXES, t)
-            s = round(time.time() - t0, 3)
-            if best_secs is None or s < best_secs:
-                best_secs, timings = s, t
-        secs = best_secs
-        elements = n_nodes + n_refs + n_ways
-        # serving-layout stages, timed separately (not part of the headline
-        # pipeline seconds, which stays comparable across rounds): write the
-        # way-geometry table partitioned on cell_round(cell, 6), then serve
-        # the 8 query boxes through partition-pruned scans (file skipping)
-        _partitioned_serving(spark, nodes, way_refs, timings)
-        _ann_stage(spark, timings)
-        _geomblob_stage(spark, nodes, way_refs, timings)
-        timings.update(timings0)
-        return timings, secs, elements
-    finally:
-        spark.stop()
-
-
-def _partitioned_serving(spark, nodes, way_refs, timings: dict):
-    import shutil
-    import tempfile
-
+def _partitioned_serving(spark, nodes, way_refs, stage: Stages, work: str):
+    """Write the way-geometry table partitioned on cell_round(cell, 6), then
+    serve the 8 query boxes through partition-pruned scans."""
     from osmquadtree_depreceated_spark import gate
     from osmquadtree_depreceated_spark.operators.calcqts import (
         way_bboxes,
@@ -263,43 +146,33 @@ def _partitioned_serving(spark, nodes, way_refs, timings: dict):
         write_cell_partitioned,
     )
 
-    work = tempfile.mkdtemp(prefix="bench_parts_")
     path = os.path.join(work, "way_geoms")
-    try:
-        wb = way_bboxes(way_refs, nodes, salt_buckets=0)
-        geoms = way_cells(wb, 0.05, 18).join(wb, "way_id")
-        t = time.time()
-        write_cell_partitioned(geoms, path, level=6)
-        timings["partitioned_write"] = round(time.time() - t, 3)
-        t = time.time()
+    wb = way_bboxes(way_refs, nodes, salt_buckets=0)
+    geoms = way_cells(wb, 0.05, 18).join(wb, "way_id")
+    stage("partitioned_write",
+          lambda: write_cell_partitioned(geoms, path, level=6))
+
+    def serve():
         for b in gate.QUERY_BOXES:
             _force(pruned_tile_scan(spark, path, b[1], b[2], b[3], b[4],
                                     level=6))
-        timings["pruned_tile_serving_8q"] = round(time.time() - t, 3)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    stage("pruned_tile_serving_8q", serve)
 
 
-def _ann_stage(spark, timings: dict):
-    """IVF ANN stage (round-3: evidences the vectorized probe kernel —
-    the per-candidate Python membership loop is gone, so this number
-    tracks matmul + top-k cost, not queries x candidates interpreter
-    work).  Timed separately from the headline pipeline."""
+def _ann_stage(spark, stage: Stages):
+    """IVF ANN top-10 for 32 queries over the embeddings table."""
     from osmquadtree_depreceated_spark.operators.ann import ivf_topk
 
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
     queries = emb.limit(32).select("vec_id", "embedding")
-    t = time.time()
-    _force(ivf_topk(queries, emb, 10))
-    timings["ann_ivf_topk_32q"] = round(time.time() - t, 3)
+    stage("ann_ivf_topk_32q", lambda: _force(ivf_topk(queries, emb, 10)))
 
 
-def _geomblob_stage(spark, nodes, way_refs, timings: dict):
-    """Packed geometry-blob codec stage (round-5): encode every node as
-    a Point blob and every way as a Linestring blob (vectorized varint
-    kernel, functions/geomblob.py), decode them back, count.  Tracks
-    codec throughput at scale — the reference's native wire format as a
-    serving-surface cost."""
+def _geomblob_stage(spark, nodes, way_refs, stage: Stages):
+    """Packed geometry-blob codec: encode every node as a Point blob and
+    every way as a Linestring blob (functions/geomblob.py), decode them
+    back, count."""
     from pyspark.sql import functions as F
 
     from osmquadtree_depreceated_spark.functions.geomblob import (
@@ -309,390 +182,111 @@ def _geomblob_stage(spark, nodes, way_refs, timings: dict):
         add_way_coords,
     )
 
-    parse = parse_geomblob_udf()
-    t = time.time()
-    pts = nodes.withColumn(
-        "blob", pack_point_udf()(F.col("node_id"), F.col("lon"),
-                                 F.col("lat"), F.lit(0)),
-    ).select(parse(F.col("blob")).alias("d"))
-    ways = add_way_coords(way_refs, nodes).withColumn(
-        "blob",
-        pack_linestring_udf()("refs", "lons", "lats",
-                              (F.col("way_id") % 1001 - 500), F.lit(1)),
-    ).select(parse(F.col("blob")).alias("d"))
-    _force(pts.unionByName(ways).select("d.np"))
-    timings["geomblob_pack_decode"] = round(time.time() - t, 3)
+    def codec():
+        parse = parse_geomblob_udf()
+        pts = nodes.withColumn(
+            "blob", pack_point_udf()(F.col("node_id"), F.col("lon"),
+                                     F.col("lat"), F.lit(0)),
+        ).select(parse(F.col("blob")).alias("d"))
+        ways = add_way_coords(way_refs, nodes).withColumn(
+            "blob",
+            pack_linestring_udf()("refs", "lons", "lats",
+                                  (F.col("way_id") % 1001 - 500), F.lit(1)),
+        ).select(parse(F.col("blob")).alias("d"))
+        _force(pts.unionByName(ways).select("d.np"))
+
+    stage("geomblob_pack_decode", codec)
+
+
+def _timed_run(spark, tr, work: str) -> dict:
+    """Warmup pipeline, then the faster of two timed pipelines, then the
+    side stages.  Returns the stage timings, the pipeline seconds, the
+    element count and the spans whose Spark metrics are reported."""
+    from osmquadtree_depreceated_spark import gate
+
+    nodes, way_refs = _inputs(spark, SF_DIR)
+    nodes.cache()
+    way_refs.cache()
+    n_nodes = nodes.count()
+    n_refs = way_refs.count()
+    tr.iteration = tracing.WARM_UP
+    run_pipeline(spark, nodes, way_refs, gate.QUERY_BOXES, Stages(tr))
+    # min of 2 timed pipelines: this is a shared box and a single run
+    # can land on a contention burst
+    best = None
+    for i in range(2):
+        tr.iteration = i
+        stage = Stages(tr)
+        t0 = time.perf_counter()
+        n_ways = run_pipeline(spark, nodes, way_refs, gate.QUERY_BOXES, stage)
+        secs = round(time.perf_counter() - t0, 3)
+        if best is None or secs < best[0]:
+            best = (secs, i, stage)
+    secs, i_best, stage = best
+    # serving-layout, ANN and geomblob stages, timed separately (not part
+    # of the headline pipeline seconds, which stays comparable across runs)
+    tr.iteration = tracing.PROBE
+    _partitioned_serving(spark, nodes, way_refs, stage, work)
+    _ann_stage(spark, stage)
+    _geomblob_stage(spark, nodes, way_refs, stage)
+    chosen = [s for s in tr.spans
+              if s["iteration"] in (i_best, tracing.PROBE)]
+    return {"timings": stage.timings, "secs": secs,
+            "elements": n_nodes + n_refs + n_ways, "spans": chosen}
+
+
+def stage_spark_metrics(spans: list, chosen: list, groups: dict) -> dict:
+    """Per stage: task time, task count and skew, GC, shuffle bytes and
+    rows handed to Python, folded from the event log."""
+    out = {}
+    for name, agg in tracing.span_spark_metrics(spans, chosen,
+                                                groups).items():
+        out[name] = {k: round(v, 3) for k, v in
+                     tracing.spark_suffixes(agg).items()}
+        out[name]["python_rows"] = agg["python_rows"]
+    return out
 
 
 def main():
-    timings, secs, elements = _timed_run(CPUS, amplify=1)
-    throughput = round(elements / secs, 1)
+    b = env.box()
+    work = os.path.join(ROOT, ".bench_work", str(os.getpid()))
+    log_dir = os.path.join(work, "eventlog")
+    env.launch_env(ROOT, work)
+    try:
+        spark = env.start_session(b, work, log_dir)
+        try:
+            settings = env.effective_conf(spark)
+            calibration = {
+                "busy_loop_kops": round(env.busy_loop_rate(), 1),
+                "zero_work_action_ms": round(
+                    env.zero_work_action_ms(spark), 1),
+            }
+            tr = tracing.Tracer(spark.sparkContext, "bench")
+            run = _timed_run(spark, tr, work)
+        finally:
+            env.stop_session(spark)
+        # the event log is complete once the session has stopped
+        spark_metrics = stage_spark_metrics(
+            tr.spans, run["spans"], tracing.read_event_log(log_dir))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+    secs, elements = run["secs"], run["elements"]
     results = {
         "metric": "tile-assignment + spatial-join throughput",
         "value": secs,
         "unit": "sec",
-        "queries": {**timings, "docs_per_sec": throughput,
+        "queries": {**run["timings"],
+                    "docs_per_sec": round(elements / secs, 1),
                     "elements": elements},
+        "spark": spark_metrics,
         "sf": SF_DIR,
-        "cpus": CPUS,
+        "cpus": b["cores"],
+        "box": b,
+        "settings": settings,
+        "calibration": calibration,
     }
-
-    if os.environ.get("BENCH_SKIP_SCALING") != "1":
-        # The sandbox is a shared box whose free CPU drifts over minutes, so
-        # a single low/high pair can be incomparable.  Run alternating
-        # adjacent pairs, calibrate the pure-CPU ceiling next to each pair,
-        # and report the best-conditioned pairing (plus all rounds).
-        # This is a SHARED box: an external tenant can appear mid-run, and a
-        # high-parallelism probe suffers disproportionately (8 threads can't
-        # find 8 free cores while 2 threads still find 2) — which silently
-        # destroys the efficiency ratio.  Each pair is therefore BRACKETED
-        # by pure-CPU ceiling calibrations; a round is valid only if both
-        # calibrations land in a physically-plausible quiet-box range and
-        # agree (stable window).  Retry within the time budget.
-        # round-3: more rounds / budget by default — round 2's driver run
-        # exhausted 900s after two unstable-bracketed pairs and the
-        # headline had to fall back to best-of-levels; buying rounds is
-        # the designed way to land a stable pair on a shared box
-        # round-5: 8 rounds / 2400s — at amplify x32 a probe round costs
-        # ~500s, and this morning's evidence run needed round 4 to land a
-        # stable physical >= 0.8 pair; a 1500s budget only fits ~3 tries
-        max_rounds = int(os.environ.get("BENCH_SCALE_ROUNDS", "8"))
-        budget = float(os.environ.get("BENCH_TIME_BUDGET", "2400"))
-        t_start = time.time()
-        pairs = []
-        for _ in range(max_rounds):
-            # THREE calibrations: each probe is bracketed individually, so
-            # a tenant burst DURING one probe (invisible to before/after
-            # brackets around the whole pair) still invalidates the round
-            c_before = _hw_ceiling(SCALE_LOW, SCALE_HIGH)
-            lo = _subprocess_probe(SCALE_LOW, AMPLIFY)
-            c_mid = _hw_ceiling(SCALE_LOW, SCALE_HIGH)
-            hi = _subprocess_probe(SCALE_HIGH, AMPLIFY)
-            c_after = _hw_ceiling(SCALE_LOW, SCALE_HIGH)
-            cs = (c_before, c_mid, c_after)
-            ceiling = round(sum(cs) / 3, 3)
-            stable = (
-                all(0.5 <= c <= 1.05 for c in cs)
-                and max(cs) - min(cs) <= 0.25
-            )
-            eff = round(
-                (hi["docs_per_sec"] / lo["docs_per_sec"])
-                / (SCALE_HIGH / SCALE_LOW),
-                3,
-            )
-            # A measured efficiency above 1.0 is NON-PHYSICAL (adding cores
-            # cannot make each core faster): it means a contention burst hit
-            # the low probe that the brackets missed.  Such a round is
-            # NON-EVIDENCE in the favorable direction — it never becomes the
-            # headline and never stops the probe early (round-4's driver run
-            # broke after a single 1.149 round because the old early-exit
-            # only checked eff >= 0.8).
-            physical = eff <= 1.0
-            pairs.append({"lo": lo, "hi": hi, "ceiling": ceiling,
-                          "eff": eff, "stable": stable,
-                          "physical": physical,
-                          "c_before": c_before, "c_mid": c_mid,
-                          "c_after": c_after})
-            if stable and physical and eff >= 0.8:
-                break
-            if time.time() - t_start > budget:
-                break
-        # Headline rule: the best ADJACENT pair whose bracketing pure-CPU
-        # calibrations were quiet and agreed (the designed methodology —
-        # adjacency controls drift, brackets detect tenants) AND whose
-        # ratio is physical (<= 1.0).  The cross-round best-of-levels
-        # ratio (each level's fastest run) is reported as a secondary
-        # indicator; it mixes non-adjacent windows, so it only REPLACES
-        # the headline when no stable physical round exists at all.
-        lo_best = min(p["lo"]["secs"] for p in pairs)
-        hi_best = min(p["hi"]["secs"] for p in pairs)
-        eff_bestlevels = round((lo_best / hi_best) / (SCALE_HIGH / SCALE_LOW),
-                               3)
-        evidence = [p for p in pairs if p["stable"] and p["physical"]]
-        if evidence:
-            best = max(evidence, key=lambda p: p["eff"])
-            headline_eff = best["eff"]
-            evidence_kind = "stable-physical-pair"
-        else:
-            # No stable-physical window this run: fall back to the least
-            # optimistic defensible number and SAY SO — naming the actual
-            # disqualifier (an unstable-but-physical window is bracket
-            # noise, not super-linearity; a non-physical window must never
-            # be laundered into the headline either way).
-            valid = [p for p in pairs if p["stable"]] or pairs
-            best = max(valid, key=lambda p: p["eff"])
-            headline_eff = min(best["eff"], eff_bestlevels, 1.0)
-            disqualifier = (
-                "non-physical-window" if not best["physical"]
-                else "unstable-window"
-            )
-            evidence_kind = f"{disqualifier} (non-evidence; see " \
-                            "BENCH/BASELINE.md for last physical pair)"
-        results["queries"]["scaling_low_cpus"] = SCALE_LOW
-        results["queries"]["scaling_high_cpus"] = SCALE_HIGH
-        results["queries"]["scaling_low_docs_per_sec"] = best["lo"]["docs_per_sec"]
-        results["queries"]["scaling_high_docs_per_sec"] = best["hi"]["docs_per_sec"]
-        results["queries"]["scaling_efficiency"] = headline_eff
-        results["queries"]["scaling_efficiency_best_pair"] = best["eff"]
-        results["queries"]["scaling_efficiency_best_levels"] = eff_bestlevels
-        results["queries"]["hw_ceiling_efficiency"] = best["ceiling"]
-        results["queries"]["scaling_all_rounds"] = [p["eff"] for p in pairs]
-        results["queries"]["scaling_round_evidence"] = [
-            ("ok" if p["stable"] and p["physical"]
-             else "non-physical" if not p["physical"]
-             else "unstable") for p in pairs
-        ]
-        results["queries"]["scaling_evidence"] = evidence_kind
-        hist_best = _update_history(pairs, evidence_kind)
-        results["queries"]["scaling_best_historical"] = (
-            hist_best["eff"] if hist_best else None
-        )
-        _write_scaling_md(best, pairs, headline_eff, eff_bestlevels,
-                          evidence_kind, results["queries"], hist_best)
-
     print(json.dumps(results))
-
-
-def _subprocess_probe(cpus: int, amplify: int) -> dict:
-    """Run tools/scale_probe.py in a FRESH process (JIT/GC/heap state never
-    leaks between parallelism levels) and parse its JSON line."""
-    import subprocess
-
-    out = subprocess.run(
-        [sys.executable, os.path.join(os.path.dirname(__file__),
-                                      "tools", "scale_probe.py"),
-         str(cpus), str(amplify), SF_DIR],
-        capture_output=True, text=True, check=True,
-        env={**os.environ, "BENCH_SCALING_PROBE": "1"},
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-def _hw_ceiling(low: int, high: int) -> float:
-    """Pure-CPU calibration: per-process Python busy-loop throughput at
-    `low` vs `high` processes — the best efficiency ANY parallel code can
-    reach on this box between the two levels (SMT / shared tenancy).
-    Median of 3 interleaved measurements to ride out load bursts."""
-    import multiprocessing as mp
-    import statistics
-
-    def _run(n):
-        with mp.Pool(n) as p:
-            return sum(p.map(_burn, [0.6] * n)) / 0.6
-
-    ratios = []
-    for _ in range(3):
-        lo = _run(low) / low
-        hi = _run(high) / high
-        ratios.append(hi / lo)
-    return round(statistics.median(ratios), 3)
-
-
-def _burn(seconds: float) -> int:
-    t0 = time.time()
-    x = 0
-    while time.time() - t0 < seconds:
-        x += 1
-    return x
-
-
-def _norm_md(eff: float, ceiling: float) -> str:
-    """Ceiling-normalized efficiency, rendered ONLY when physical.
-
-    If raw/ceiling > 1.0 the pipeline out-scaled the pure-CPU
-    calibration — the ceiling probe caught a contention burst the jobs
-    didn't, so normalizing would INFLATE the number past a physical
-    bound.  Every displayed figure must be physical: in that case the
-    headline stands on the raw (conservative) pair and normalization is
-    declared inapplicable, never printed >1.0 or clamped."""
-    if not ceiling:
-        return "n/a (no ceiling measured)"
-    n = round(eff / ceiling, 3)
-    if n > 1.0:
-        return (f"n/a — raw/ceiling = {n} > 1.0, ceiling window "
-                "inconsistent (calibration saw contention the jobs "
-                "didn't); the raw pair above is the conservative, "
-                "physical headline")
-    return str(n)
-
-
-def _history_md(hist_best: dict | None) -> str:
-    if not hist_best:
-        return ("(No prior stable-physical pair on record — "
-                "BENCH/history.json starts with this run.)")
-    return (
-        f"Best HISTORICAL stable-physical pair at this protocol "
-        f"({hist_best['low_cpus']}->{hist_best['high_cpus']}, "
-        f"BENCH/history.json, accumulated across runs): "
-        f"**{hist_best['eff']}** (ceiling {hist_best['ceiling']}, "
-        f"local[{hist_best['low_cpus']}] {hist_best['lo_secs']}s vs "
-        f"local[{hist_best['high_cpus']}] {hist_best['hi_secs']}s, "
-        f"recorded {hist_best['recorded']}).  A single noisy window "
-        f"reports its own weak pair WITHOUT erasing this — the "
-        f"criterion stands on the best stable-physical evidence, which "
-        f"only ever accumulates."
-    )
-
-
-def _update_history(pairs: list, evidence_kind: str) -> dict | None:
-    """Append this run's stable-physical rounds to BENCH/history.json and
-    return the best historical record.  Evidence ACCUMULATES: one noisy
-    window (e.g. a driver refresh that only fits 2-3 probe rounds) can
-    report its own weak pair without erasing a previously-measured good
-    one — the generated BASELINE.md always shows both."""
-    path = os.path.join("BENCH", "history.json")
-    hist = []
-    try:
-        with open(path) as f:
-            hist = json.load(f)
-    except (OSError, ValueError):
-        pass
-    for p in pairs:
-        if p.get("stable") and p.get("physical"):
-            hist.append({
-                "eff": p["eff"], "ceiling": p["ceiling"],
-                "lo_secs": p["lo"]["secs"], "hi_secs": p["hi"]["secs"],
-                "low_cpus": SCALE_LOW, "high_cpus": SCALE_HIGH,
-                "sf": SF_DIR, "amplify": AMPLIFY,
-                "recorded": time.strftime("%Y-%m-%d %H:%M:%S"),
-            })
-    os.makedirs("BENCH", exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(hist, f, indent=1)
-    # the protocol key must include amplify: a light amplify=1 pair is a
-    # different workload and must not stand in for the amplify=32 one
-    protocol = [h for h in hist
-                if (h.get("low_cpus"), h.get("high_cpus"), h.get("sf"),
-                    h.get("amplify"))
-                == (SCALE_LOW, SCALE_HIGH, SF_DIR, AMPLIFY)]
-    return max(protocol, key=lambda h: h["eff"]) if protocol else None
-
-
-def _write_scaling_md(best: dict, pairs: list, headline_eff: float,
-                      eff_bestlevels: float, evidence_kind: str,
-                      queries: dict, hist_best: dict | None = None):
-    lo, hi = best["lo"], best["hi"]
-    eff, ceiling = best["eff"], best["ceiling"]
-    # the criterion number is the accumulated best stable-physical pair
-    # (this run's rounds were already folded into history before this
-    # writer runs); only when history is empty does this run stand alone
-    criterion_eff = hist_best["eff"] if hist_best else headline_eff
-    rounds_md = "\n".join(
-        f"| {i + 1} | {p['lo']['secs']} | {p['hi']['secs']} | {p['eff']} |"
-        f" {p['ceiling']} | {'yes' if p.get('stable') else 'NO'} |"
-        f" {'yes' if p.get('physical', True) else 'NO — non-evidence'} |"
-        for i, p in enumerate(pairs)
-    )
-    calib_md = (
-        f"Self-calibration of the headline run (same session): "
-        f"calib_trivial_job_s = **{queries.get('calib_trivial_job_s')}** "
-        f"(zero-work Spark action — per-action serial cost), "
-        f"calib_cpu_kops = **{queries.get('calib_cpu_kops')}** "
-        f"(single-process busy-loop rate — instantaneous free CPU).\n"
-        f"Quiet-box reference (measured round 5): calib_trivial_job_s "
-        f"~ 0.05-0.2, calib_cpu_kops ~ 8000-10000 (this box; compare "
-        f"against the values recorded in past BENCH_r*.json, not "
-        f"absolutes).  Interpretation rule: a headline "
-        f"regression accompanied by a proportional calib degradation is "
-        f"ENVIRONMENTAL (shared-box contention during the window), not an "
-        f"engine change; only a headline move at quiet calib values is "
-        f"evidence about the code."
-    )
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(f"""# BENCH/BASELINE — measured throughput + scaling evidence
-
-Input: {SF_DIR} synthesized spatial layer amplified x{AMPLIFY}
-({lo['elements']} elements = nodes + way-refs), identical for all runs.
-Each run is an isolated process (fresh JVM): untimed warmup pipeline, then
-min of 2 timed pipelines of the fused flagship DAG (salted way-bbox
-aggregation -> buffered way-cell kernel -> node Common fold -> cell
-histogram, plus query-bbox join -> z12 raster rollup, single action).
-
-This sandbox is a shared box whose free CPU drifts over minutes, so
-low/high pairs run ADJACENT in time, each with its own pure-CPU ceiling
-calibration (per-core busy-loop throughput ratio between the same two
-process counts — the ceiling ANY perfectly-parallel code can reach under
-the instantaneous machine conditions).
-
-A round is EVIDENCE only if (a) its bracketing calibrations are quiet and
-agree (stable window) AND (b) its ratio is physical (<= 1.0 — adding cores
-cannot make each core faster; a super-linear reading means a burst hit the
-low probe and the round is discarded as non-evidence, never clamped into
-the headline).
-
-| round | local[{SCALE_LOW}] secs | local[{SCALE_HIGH}] secs | efficiency | hw ceiling | stable window | physical |
-|---|---|---|---|---|---|---|
-{rounds_md}
-
-Evidence class of this run's headline: **{evidence_kind}**.
-
-{_history_md(hist_best)}
-
-{calib_md}
-
-Selected pairing (best stable-physical round, else the least-bad
-fallback — the evidence class above says which this is):
-
-| run | master | pipeline secs | throughput (docs/sec) |
-|---|---|---|---|
-| A (low)  | local[{SCALE_LOW}] | {lo['secs']} | {lo['docs_per_sec']} |
-| B (high) | local[{SCALE_HIGH}] | {hi['secs']} | {hi['docs_per_sec']} |
-
-selected adjacent-pair efficiency = (tp_B / tp_A) /
-({SCALE_HIGH}/{SCALE_LOW}) = **{eff}**; secondary indicator — cross-round
-best-of-levels ratio (each level's fastest run; mixes non-adjacent
-windows) = **{eff_bestlevels}**; THIS RUN'S WINDOW (best stable AND
-physical pair of this run; the fallbacks replace it only when no such
-round exists, and then the evidence class above says so)
-= **{headline_eff}**.
-
-CRITERION HEADLINE = **{criterion_eff}** — the north-rule number stands
-on the ACCUMULATED best stable-physical pair (the "Best HISTORICAL"
-entry above, which this run's rounds feed into): evidence of what the
-engine can do only ever accumulates, so one contended probe window can
-neither erase nor downgrade it (target >= 0.8 per BASELINE.json
-north_rule; sandbox stand-in for N vs 4N executors per BASELINE.md
-"Sandbox scaling protocol").
-Hardware ceiling in the same window: **{ceiling}**; engine efficiency
-normalized to the ceiling: **{_norm_md(eff, ceiling)}**.
-The {SCALE_LOW}->{SCALE_HIGH} pair is used because this box's 8->32
-ceiling (~0.68 measured quiet) sits below the 0.8 target — the criterion
-is unmeasurable at 8->32 on this hardware regardless of engine quality.
-
-## Per-stage scaling diagnosis (round 4, tools/scale_diag.py)
-
-Measured per-stage 2->8 efficiency at the OLD settings (amplify x16,
-per-level-tuned partitions), quiet window (ceilings 0.918-0.999):
-
-| stage | local[2] s | local[8] s | efficiency |
-|---|---|---|---|
-| calib_trivial_job (pure fixed cost) | 0.063 | 0.046 | 0.342 |
-| way_bboxes (join + partial min/max) | 12.665 | 3.422 | 0.925 |
-| way_cells_kernel (Arrow descent) | 2.301 | 0.742 | 0.775 |
-| node_common_fold | 6.962 | 2.739 | 0.635 |
-| bbox_join_rollup | 2.320 | 1.399 | 0.415 |
-| node_hist | 6.923 | 2.811 | 0.616 |
-| fused pipeline | 34.241 | 11.548 | 0.741 |
-
-Fitting t = c + p/k per stage: every DISTRIBUTED stage scales (the
-biggest, way_bboxes, at 0.925); the limiter is ~4s of per-run serial
-cost (Catalyst analysis + codegen + broadcast builds + commit), which
-is constant per ACTION, not per row — at production scale (hours of
-task work per action) it vanishes.  Fixes applied: amplify x16 -> x32
-(per-task work dominates the fixed cost the way production does) and
-same-job-config partition parity across levels.  A trial
--XX:ActiveProcessorCount pin on the probe JVMs was REJECTED: it
-measured 1.17 (super-linear = over-constrained low JVM, not evidence).
-""")
-        # persistent supplementary evidence (e.g. the measured 8->32
-        # octave): BASELINE.md is regenerated wholesale on every probe
-        # run, so anything that must survive a driver refresh lives in
-        # BENCH/SUPPLEMENTARY.md and is re-appended here
-        supp = os.path.join("BENCH", "SUPPLEMENTARY.md")
-        if os.path.exists(supp):
-            with open(supp) as sf:
-                f.write("\n" + sf.read())
 
 
 if __name__ == "__main__":

@@ -25,29 +25,22 @@ __version__ = "0.1.0"
 def _default_launch_env() -> None:
     """Fill launch-time engine defaults (core Spark conf that must exist
     BEFORE the JVM/SparkContext starts; runtime-settable conf lives in
-    conf.apply_engine_conf).  Harness entrypoints (bench.py,
-    tools/scale_probe.py, __spark_entry__) import this package before
-    building their session, so the defaults land; anything already set in
+    conf.apply_engine_conf).  Harness entrypoints (bench.py, qtbench,
+    tools/check_gates.py, __spark_entry__) import this package before
+    building their session, so the default lands; anything already set in
     the environment wins, and a session created before this import is
-    simply unaffected (these are performance settings, not semantics).
+    simply unaffected (this is a performance setting, not semantics).
 
-    1. spark.shuffle.sort.bypassMergeThreshold=7 — with R reduce
-       partitions the bypass-merge shuffle writer creates R files per map
-       task; on this sandbox's virtio ext4 the per-file open/commit cost
-       makes a 4 MB 64x64 shuffle spend ~0.25 s PER TASK in shuffle write
-       (~30 s of executor time inside a 1.4 s job; microbench in
-       OPTIMIZATION_r06.md).  At production scale R >> 200, so Spark uses
-       the serialized sort writer anyway — pinning it locally makes the
-       local shuffle path MATCH the production writer and measured ~3.5x
-       faster wall on the same shuffle.
-    2. SPARK_LOCAL_DIRS -> /dev/shm when it is present with >= 16 GiB
-       free — shuffle/spill scratch on the fast local medium (the
-       production analogue is NVMe scratch; this sandbox's /tmp is a slow
-       virtio ext4, measured ~7x the CPU on small shuffle writes).  Bench
-       shuffles are MBs-to-GBs against a 126 GB tmpfs; Spark removes its
-       scratch dirs at context stop.  Override the directory with
-       SPARK_GRAFT_LOCAL_DIR=<path>, or disable with
-       SPARK_GRAFT_LOCAL_DIR=0.
+    spark.shuffle.sort.bypassMergeThreshold=7 — with R reduce partitions
+    the bypass-merge shuffle writer creates R files per map task; on a
+    virtio ext4 scratch disk the per-file open/commit cost made a 4 MB
+    64x64 shuffle spend ~0.25 s PER TASK in shuffle write (~30 s of
+    executor time inside a 1.4 s job; microbench in OPTIMIZATION_r06.md).
+    At production scale R >> 200, so Spark uses the serialized sort
+    writer anyway — pinning it locally makes the local shuffle path MATCH
+    the production writer and measured ~3.5x faster wall on the same
+    shuffle.  Where shuffle scratch goes (SPARK_LOCAL_DIRS) is left to
+    the caller.
     """
     import os
 
@@ -65,20 +58,6 @@ def _default_launch_env() -> None:
         os.environ["PYSPARK_SUBMIT_ARGS"] = (
             "--conf spark.shuffle.sort.bypassMergeThreshold=7 " + existing
         )
-
-    want = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if want == "0" or "SPARK_LOCAL_DIRS" in os.environ:
-        return
-    cand = want or "/dev/shm"
-    try:
-        st = os.statvfs(cand)
-        free_gb = st.f_bavail * st.f_frsize / (1 << 30)
-        if os.path.isdir(cand) and os.access(cand, os.W_OK) and (
-            want or free_gb >= 16
-        ):
-            os.environ["SPARK_LOCAL_DIRS"] = cand
-    except OSError:
-        pass
 
 
 _default_launch_env()

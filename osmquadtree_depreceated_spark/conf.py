@@ -1,8 +1,9 @@
 """Engine-level Spark conf the package requires for correct execution.
 
 Applied at runtime (all entries are runtime-settable) by gate._prep,
-tests/conftest, bench.py and the spark-submit pipeline, so the engine is
-safe regardless of how the hosting session was built.
+tests/conftest, qtbench/env.py (whose session bench.py also uses) and the
+spark-submit pipeline, so the engine is safe regardless of how the
+hosting session was built.
 """
 
 from __future__ import annotations

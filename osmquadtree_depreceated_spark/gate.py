@@ -2106,24 +2106,25 @@ _WAY_TAG_CASES = {
     "randomkey": ("way_id % 2 = 0", "'rv' || (way_id % 6)"),
 }
 
-# The tags map derives from mw = max(way_id), which per group IS way_id
-# (max of the grouping key over its own group) — value-identical, but an
-# AGGREGATE output: Catalyst cannot substitute a predicate through it, so
-# a consumer filter over the (expensive-to-substitute) tags map stops at
-# this boundary and evaluates once per way instead of once per way_refs
-# ROW.  Without the barrier, q31's `element_at(tags_out,'highway') is
-# not null` was pushed below the distinct with the entire tag rewrite —
-# including its Python UDF — inlined, re-evaluated per 600k base rows
-# (40x row amplification; 13 s of a 14.7k-row stage at sf0.1).
-# Predicates on way_id itself still push all the way down.
+# The tags map derives from the inner `way_id` = max(way_id), which per
+# group IS the grouping key (max of the key over its own group) —
+# value-identical, but an AGGREGATE output: Catalyst cannot substitute a
+# predicate through it, so a consumer filter over the
+# (expensive-to-substitute) tags map stops at this boundary and evaluates
+# once per way instead of once per way_refs ROW.  Without the barrier,
+# q31's `element_at(tags_out,'highway') is not null` was pushed below the
+# distinct with the entire tag rewrite — including its Python UDF —
+# inlined, re-evaluated per 600k base rows (40x row amplification; 13 s
+# of a 14.7k-row stage at sf0.1).  Predicates on the outer way_id (the
+# grouping key) still push all the way down.
 _WAY_TAGS_SPARK_SQL = """
-select way_id,
+select wid as way_id,
   map_filter(map(""" + ", ".join(
     f"'{k}', case when {cond} then cast({val} as string) end"
-    .replace("way_id", "mw")
     for k, (cond, val) in _WAY_TAG_CASES.items()
 ) + """), (k, v) -> v is not null) as tags
-from (select way_id, max(way_id) as mw from way_refs group by way_id) w
+from (select way_id as wid, max(way_id) as way_id
+      from way_refs group by way_refs.way_id) w
 """
 
 

@@ -37,19 +37,9 @@ def ivf_topk(queries: DataFrame, candidates: DataFrame, k: int,
     probabilistic (tested against cosine_topk in pytest); raising n_probe
     to n_centroids degrades gracefully to exact.
     """
-    # The two driver-side reads (training sample, query matrix) are
-    # independent jobs; run them concurrently so the second's latency
-    # hides inside the first's (guide §2.6 overlap-independent-jobs —
-    # worth ~0.2-0.4 s of the single-shot stage cost at sf0.1).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        qfut = pool.submit(
-            lambda: queries.select(qid_col, vec_col).collect()
-        )
-        C = train_ivf_centroids(candidates, n_centroids, kmeans_iters,
-                                sample_mod, seed, id_col, vec_col)
-        qrows = qfut.result()
+    C = train_ivf_centroids(candidates, n_centroids, kmeans_iters,
+                            sample_mod, seed, id_col, vec_col)
+    qrows = queries.select(qid_col, vec_col).collect()
     if C is None:  # empty/over-thinned sample: nothing to index
         spark = candidates.sparkSession
         return spark.createDataFrame(

@@ -207,8 +207,13 @@ def with_tag_rewrite(df: DataFrame, which: str = "way",
         extra.append(F.expr(_zorder_sql(f"{pk}.kept")).alias("z_order"))
         extra.append(F.col(f"{pk}.poly").alias("is_poly"))
     extra.append(F.col(f"{pk}.feat").alias("is_feature"))
-    df = df.select("*", *extra)
-    return df.drop(*[c for c in df.columns if c.startswith(t)])
+    # input columns named like an output are replaced, as withColumn would
+    outs = {"tags_out", "z_order", "is_poly", "is_feature"}
+    return df.select(
+        *[F.col(f"`{c}`") for c in df.columns
+          if c not in outs and not c.startswith(t)],
+        *extra,
+    )
 
 
 def _zorder_sql(kept: str) -> str:

@@ -139,9 +139,8 @@ def bucketed_way_node_join(spark: SparkSession, way_refs: DataFrame,
 
 def way_bbox_agg(joined: DataFrame) -> DataFrame:
     """Per-way bbox over a (way_id, lon, lat) join result — the second
-    half of operators.calcqts.way_bboxes, shared by gates q60/q61 and
-    tools/bucketed_ab.py so the aggregation semantics live in exactly
-    one place."""
+    half of operators.calcqts.way_bboxes, shared by gates q60/q61 so the
+    aggregation semantics live in exactly one place."""
     from pyspark.sql import functions as F
 
     return joined.groupBy("way_id").agg(

@@ -37,7 +37,7 @@ def write_cell_partitioned(df: DataFrame, path: str, level: int = 6,
 
     Hot-cell skew (one cell holding a large share of the rows — a dense
     metro tile at planet scale) gets two measured knobs
-    (tools/hotcell_ab.py, BENCH/HOTCELL_AB.md):
+    (BENCH/HOTCELL_AB.md):
 
     * ``max_records_per_file`` caps ROWS PER FILE via the writer's
       maxRecordsPerFile option — bounds file size (and the memory of any

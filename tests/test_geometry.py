@@ -243,6 +243,28 @@ class TestTagRewrite:
             assert dict(r["tags_out"] or {}) == newtags, c
             assert r["is_feature"] == isfeat, c
 
+    def test_rewrite_replaces_existing_output_columns(self, spark):
+        from osmquadtree_depreceated_spark.operators.geometry import (
+            with_tag_rewrite,
+        )
+        from osmquadtree_depreceated_spark.qtcore import tags as T
+
+        df = spark.createDataFrame(
+            [(i, c, {"stale": "x"}, -1, True, False)
+             for i, c in enumerate(self.CASES)],
+            "id long, tags map<string,string>, tags_out map<string,string>,"
+            " z_order long, is_poly boolean, is_feature boolean",
+        )
+        out = with_tag_rewrite(df, "way")
+        assert sorted(out.columns) == sorted(
+            ["id", "tags", "tags_out", "z_order", "is_poly", "is_feature"])
+        rows = {r["id"]: r for r in out.collect()}
+        for i, c in enumerate(self.CASES):
+            zo, isp, newtags = T.way_tags_filter(c)
+            assert dict(rows[i]["tags_out"] or {}) == newtags, c
+            assert rows[i]["z_order"] == zo, c
+            assert rows[i]["is_poly"] == isp, c
+
 
 @pytest.fixture(scope="module")
 def geo_data(spark):

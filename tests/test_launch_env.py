@@ -11,8 +11,7 @@ _BMT = "spark.shuffle.sort.bypassMergeThreshold"
 
 
 def _with_env(monkeypatch, **kv):
-    for k in ("PYSPARK_SUBMIT_ARGS", "SPARK_LOCAL_DIRS",
-              "SPARK_GRAFT_LOCAL_DIR"):
+    for k in ("PYSPARK_SUBMIT_ARGS", "SPARK_LOCAL_DIRS"):
         monkeypatch.delenv(k, raising=False)
     for k, v in kv.items():
         monkeypatch.setenv(k, v)
@@ -24,6 +23,8 @@ def test_submit_args_default_when_unset(monkeypatch):
     args = os.environ["PYSPARK_SUBMIT_ARGS"]
     assert f"--conf {_BMT}=7" in args
     assert args.endswith("pyspark-shell")
+    # shuffle scratch placement is the caller's choice
+    assert "SPARK_LOCAL_DIRS" not in os.environ
 
 
 def test_submit_args_merged_when_preset(monkeypatch):
@@ -42,14 +43,3 @@ def test_submit_args_explicit_threshold_wins(monkeypatch):
     _default_launch_env()
     assert os.environ["PYSPARK_SUBMIT_ARGS"] == preset
 
-
-def test_local_dirs_env_wins(monkeypatch):
-    _with_env(monkeypatch, SPARK_LOCAL_DIRS="/already/set")
-    _default_launch_env()
-    assert os.environ["SPARK_LOCAL_DIRS"] == "/already/set"
-
-
-def test_local_dirs_disable(monkeypatch):
-    _with_env(monkeypatch, SPARK_GRAFT_LOCAL_DIR="0")
-    _default_launch_env()
-    assert "SPARK_LOCAL_DIRS" not in os.environ

@@ -11,6 +11,8 @@ plan under audit is the per-batch batch plan already covered by the
 batch-operator tests.
 """
 
+import re
+
 import pytest
 
 from osmquadtree_depreceated_spark import gate
@@ -42,16 +44,32 @@ _FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin")
 # oracle baseline; q24_knn_cells is the scale path and must stay clean)
 _ALLOWED = {"q08_knn": ("BroadcastNestedLoopJoin",)}
 
+# Plan-size budget for every swept gate: an expression that Catalyst
+# inlines into each of its references (the failure class behind the
+# 1,132,785-char assign_groups plan) shows as plan text long before it
+# shows as wall time.  Largest swept gates at sf0.001: q48 at 258,778
+# optimized-plan chars, q52 at 9 Python-eval nodes.
+MAX_PLAN_CHARS = 400_000
+MAX_PYTHON_EVAL_NODES = 16
+
 
 @pytest.mark.parametrize("name", [
     n for n in gate.GATE_QUERIES if n not in _STREAMING | _BUILD_WRITES
 ])
 def test_gate_plan_has_no_cartesian_or_bnlj(spark, sf_dir, name):
     df = gate.GATE_QUERIES[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
     hits = [m for m in _FORBIDDEN if m in plan and m not in
             _ALLOWED.get(name, ())]
     assert not hits, (
         f"{name} plans {hits} — non-equi or keyless join reached the "
         f"physical plan:\n{plan[:3000]}"
     )
+    n_chars = len(qe.optimizedPlan().toString())
+    assert n_chars < MAX_PLAN_CHARS, (
+        f"{name}: optimized plan is {n_chars} chars — an expression is "
+        f"being inlined into its references")
+    n_py = len(re.findall(r"\b(?:ArrowEvalPython|BatchEvalPython)\b", plan))
+    assert n_py < MAX_PYTHON_EVAL_NODES, (
+        f"{name}: {n_py} Python-eval nodes in the physical plan")
