@@ -3036,7 +3036,7 @@ def q49_oracle_build() -> str | None:
 def q50_snapshot_pipeline(spark, sf_dir) -> DataFrame:
     """The RESUMABLE snapshot pipeline end-to-end (plans/lineage.py):
     calcqts stages committed through the SnapshotStore (parquet +
-    per-partition lineage rows), results read back FROM THE SNAPSHOTS —
+    per-file lineage rows), results read back FROM THE SNAPSHOTS —
     one golden_cells-shaped table (etype, id, cell) over ways, nodes and
     relations.  Within one session a second invocation RESUMES from the
     committed stages and must produce identical rows.  Oracle: the q03 /
@@ -3772,27 +3772,70 @@ select key, seq, change_type, val from (
 ) where rn = 1"""
 
 
-# q58: the PER-PARTITION LINEAGE ROWS themselves (plans/lineage.py) —
-# the north rule's "resumable from checkpoint with per-partition lineage
-# + metrics".  q50 verifies the snapshot DATA round-trip; this gate
+# q58: the PER-FILE LINEAGE ROWS themselves (plans/lineage.py) — the
+# north rule's "resumable from checkpoint with per-partition lineage +
+# metrics".  q50 verifies the snapshot DATA round-trip; this gate
 # verifies the recorded METADATA: per-stage totals and cell ranges as
 # derived FROM THE LINEAGE ROWS must equal the independent DuckDB
-# descent oracles (q03/q04/q05), and the per-partition checksum path is
-# verified in-gate by an independent recompute over the stored parquet
-# (sorted-by-partition exact equality, raising on any mismatch).
+# descent oracles (q03/q04/q05), and the per-file rows plus the stage
+# checksum are verified in-gate by an independent recompute over the
+# stored parquet (raising on any mismatch).
+
+def q58_check_stage(spark, store, stage: str) -> list:
+    """Re-derive a committed stage's lineage from its stored Parquet and
+    raise unless it equals what `SnapshotStore.write` recorded: per data
+    file (grouped by `_metadata.file_name`) the row count and `cell`
+    min/max (NULL when the stage has no `cell` column), and the stage
+    `row_checksum` against the manifest's observed one.  The recorded rows come from Parquet footers and a write-time
+    observation, the recompute from a scan of the rows, so a torn or
+    partial write diverges; the checksum formula is the shared single
+    definition.  A file with no rows has no group here, so its recorded
+    row must say 0 rows with NULL bounds.  Returns the recorded rows."""
+    from .plans.lineage import row_checksum
+
+    manifest = store.manifest(stage)
+    recorded = [r for r in store.lineage_rows(stage)
+                if r["snapshot_id"] == manifest["snapshot_id"]]
+    stored = store.read(spark, stage)
+    bound = (F.col("cell") if "cell" in stored.columns
+             else F.lit(None).cast("long"))
+    per_file = (
+        stored.groupBy(F.col("_metadata.file_name").alias("file"))
+        .agg(F.count(F.lit(1)).alias("row_count"),
+             F.min(bound).alias("cell_min"), F.max(bound).alias("cell_max"),
+             row_checksum(stored.columns).alias("checksum"))
+        .collect()
+    )
+    got = sorted((r["file"], r["row_count"], r["cell_min"], r["cell_max"])
+                 for r in per_file)
+    want = sorted((r["file"], r["row_count"], r["cell_min"], r["cell_max"])
+                  for r in recorded if r["row_count"])
+    empty_ok = all(r["cell_min"] is None and r["cell_max"] is None
+                   for r in recorded if not r["row_count"])
+    if got != want or not empty_ok:
+        raise AssertionError(
+            f"q58: lineage rows for stage {stage} diverge from the "
+            f"independent recompute: recorded={recorded} got={got}"
+        )
+    checksum = sum(r["checksum"] or 0 for r in per_file) % (1 << 63)
+    if checksum != manifest["checksum"]:
+        raise AssertionError(
+            f"q58: stage {stage} checksum {checksum} recomputed from the "
+            f"stored parquet != observed {manifest['checksum']}"
+        )
+    return recorded
+
 
 def q58_lineage_rows(spark, sf_dir) -> DataFrame:
     """Value-verify the snapshot store's lineage metadata: stage-level
-    row counts + cell ranges folded from the recorded per-partition
-    lineage rows vs the q03-q05 oracles; per-partition (cell_min,
-    cell_max, row_count, checksum) re-derived independently from the
-    committed parquet and asserted equal to what `write` recorded."""
+    row counts + cell ranges folded from the recorded per-file lineage
+    rows vs the q03-q05 oracles; every stage's rows and checksum
+    re-derived independently from the committed parquet
+    (`q58_check_stage`)."""
     _prep(spark, sf_dir)
     import hashlib as _hl
 
-    from .plans.lineage import (
-        SnapshotStore, calcqts_pipeline, partition_lineage,
-    )
+    from .plans.lineage import SnapshotStore, calcqts_pipeline
 
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
     # same store key as q50: whichever gate runs first builds the
@@ -3808,34 +3851,7 @@ def q58_lineage_rows(spark, sf_dir) -> DataFrame:
     )
     summary = []
     for stage in ("way_cells", "node_cells", "rel_cells"):
-        snap = store.manifest(stage)["snapshot_id"]
-        recorded = sorted(
-            (r for r in store.lineage_rows(stage)
-             if r["snapshot_id"] == snap),
-            key=lambda r: r["partition_id"],
-        )
-        # the independence is recompute-from-the-stored-parquet vs
-        # recorded-at-write-time (catches torn/partial writes); the
-        # formula itself is the shared single definition
-        recomputed = sorted(
-            partition_lineage(store.read(spark, stage)),
-            key=lambda r: r["_pid"],
-        )
-        got = [
-            (r["_pid"], r["cell_min"], r["cell_max"], r["row_count"],
-             r["checksum"])
-            for r in recomputed
-        ]
-        want = [
-            (r["partition_id"], r["cell_min"], r["cell_max"],
-             r["row_count"], r["checksum"])
-            for r in recorded
-        ]
-        if got != want:
-            raise AssertionError(
-                f"q58: lineage rows for stage {stage} diverge from the "
-                f"independent recompute: recorded={want} got={got}"
-            )
+        recorded = q58_check_stage(spark, store, stage)
         summary.append((
             stage,
             sum(r["row_count"] for r in recorded),

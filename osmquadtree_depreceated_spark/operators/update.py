@@ -8,10 +8,11 @@ Reference semantics:
     mergechange.go:18-65): Delete drops the base row, Modify/Create replace
     it, Create of an unseen key inserts.
 
-Both are pure relational ops: a window dedup and a full-outer join — at
-production scale the same semantics run as `MERGE INTO` against the
-snapshot-versioned table (plans/lineage.py), reading only affected cell
-partitions (update.go:343-472)."""
+Both are pure relational ops: a window dedup, then the base LEFT JOIN the
+change-sized newest rows plus the changes of unseen keys — the base is
+streamed, not shuffled.  At production scale the same semantics run as
+`MERGE INTO` against the snapshot-versioned table (plans/lineage.py),
+reading only affected cell partitions (update.go:343-472)."""
 
 from __future__ import annotations
 
@@ -35,25 +36,37 @@ def calc_update_tiles(nodes: DataFrame, way_refs: DataFrame,
     full recompute over the merged input (the q33 oracle checks exactly
     that).
 
-    Dataflow (every step a semi/anti-join or aggregation — the change
-    batch is tiny relative to the base, so each stage touches only the
-    affected partitions; with cell-partitioned snapshot tables the
-    anti/union merge is an Iceberg MERGE INTO):
+    Dataflow (every step joins or aggregates against one of the
+    change-sized sets, so its work scales with the batch; a base table
+    is streamed through a join with such a set, not shuffled whole):
 
-      1. merged nodes      = Delete/Modify/Create semantics (mergechange.go)
-      2. affected ways     = ways referencing any changed node (FindTiles'
-                             id -> tile lookup, here id -> way semi-join)
-      3. their cells       = bbox over merged locations -> buffered descent
+      1. latest changes    = newest change per node (filterLastObj),
+                             computed ONCE and materialized
+      2. merged nodes      = Delete/Modify/Create semantics over those
+                             rows (mergechange.go; `merge_changes`' plan)
+      3. affected ways     = ways referencing any changed node (FindTiles'
+                             id -> tile lookup, here id -> way semi-join),
+                             materialized
+      4. affected nodes    = changed nodes + every node of an affected way,
+                             minus deleted ones (update.go:459-472 nqts),
+                             materialized
+      5. their way cells   = bbox over merged locations -> buffered descent
                              (update.go:412-457); ways left with no nodes
                              drop (matching the full-recompute pipeline)
-      4. affected nodes    = changed nodes + every node of an affected way
-                             (update.go:459-472 nqts)
-      5. their cells       = Common over parent-way cells from the MERGED
+      6. merged way cells  = old (anti-join affected) UNION new — with
+                             `store`, committed here as way_cells@{batch_id}
+                             and every later step reads that snapshot
+      7. their node cells  = Common over parent-way cells from the MERGED
                              way-cell table, point-box fallback
-      6. merged cell tables = old (anti-join affected) UNION new
-      7. affected tiles    = distinct cell_round(old + new cells of touched
+      8. merged node cells = old (anti-join touched) UNION new — with
+                             `store`, committed as node_cells@{batch_id}
+      9. affected tiles    = distinct cell_round(old + new cells of touched
                              elements, group_level) — the tile set a tiled
                              store must rewrite
+
+    The three change-sized sets (1, 3, 4) are each computed once with an
+    eager localCheckpoint; every consumer reads the checkpoint instead of
+    re-running its plan.
 
     node_changes: (node_id, seq, change_type in delete/modify/create, lon,
     lat).  Returns dict(nodes, way_cells, node_cells, affected_ways,
@@ -61,30 +74,24 @@ def calc_update_tiles(nodes: DataFrame, way_refs: DataFrame,
     LAZY anti-join DataFrame of affected-way members with no location
     after the merge (count it to get the reference's guard number; it is
     only counted internally when missing_node_cap is set).  With
-    `store`, the merged cell tables
-    commit as snapshot stages way_cells@{batch_id} / node_cells@{batch_id}
-    (resumable; plans/lineage.py).
+    `store`, the merged cell tables commit as snapshot stages
+    way_cells@{batch_id} / node_cells@{batch_id} (resumable;
+    plans/lineage.py) and are returned as read back from them.
     """
     from ..functions.cells import cell_round
     from .calcqts import node_cells as _node_cells
     from .calcqts import way_bboxes, way_cells as _way_cells
 
-    merged_nodes = merge_changes(
-        nodes, node_changes, "node_id", val_cols=("lon", "lat")
+    val_cols = ("lon", "lat")
+    latest = _latest_changes(
+        node_changes, "node_id", "change_type", "seq", val_cols,
+    ).localCheckpoint(eager=True)
+    merged_nodes = _merge_latest(
+        nodes, latest, "node_id", "change_type", val_cols,
     )
-    changed = latest_version(
-        node_changes,
-        ["node_id"],
-        # full-tuple descending order: equal-seq duplicate changes resolve
-        # to the same winner as the streaming stateful op's (seq,
-        # change_type, value...) tuple max — batch == incremental on ties
-        [("seq", "desc"), ("change_type", "desc"),
-         ("lon", "desc"), ("lat", "desc")],
-    )
-    changed_ids = changed.select("node_id").distinct()
+    changed_ids = latest.select("node_id")
     deleted_ids = (
-        changed.filter(F.col("change_type") == CT_DELETE)
-        .select("node_id").distinct()
+        latest.filter(F.col("change_type") == CT_DELETE).select("node_id")
     )
 
     affected_ways = (
@@ -94,20 +101,32 @@ def calc_update_tiles(nodes: DataFrame, way_refs: DataFrame,
         )
         .select("way_id")
         .distinct()
-    )
+    ).localCheckpoint(eager=True)
     aff_refs = way_refs.join(affected_ways, "way_id", "left_semi")
+    affected_nodes = (
+        aff_refs.select(F.col("ref").alias("node_id"))
+        .unionByName(changed_ids)
+        .distinct()
+        .join(deleted_ids, "node_id", "left_anti")
+    ).localCheckpoint(eager=True)
+    # every element whose node cell may change or vanish
+    touched_nodes = affected_nodes.unionByName(changed_ids)
+    # the merged rows every affected-way member can join: a member that
+    # is not an affected node was deleted, so it has no merged row either
+    aff_node_rows = merged_nodes.join(affected_nodes, "node_id", "left_semi")
     # Missing-node accounting (update.go:425-437): the reference logs
     # every way member whose location is absent after the merge and
     # PANICS at 100 — a corruption guard on the location cache.  The
     # distributed analogue is an anti-join over the affected subset only
     # (O(changed), not O(base)), returned LAZILY as the `missing_refs`
-    # DataFrame — no extra Spark action unless a cap is enforced or the
-    # caller counts it.  Cap defaults to None because legitimately
+    # DataFrame over the change-sized sets, which were materialized
+    # above when this function was called; counting it is an extra
+    # Spark action only when a cap is enforced or the caller counts it.  Cap defaults to None because legitimately
     # deleting a still-referenced node also counts as missing (in the
     # reference too) and synthetic fixtures do that freely; production
     # runs against a trusted cache pass cap=100.
     missing_refs = aff_refs.join(
-        merged_nodes, aff_refs["ref"] == merged_nodes["node_id"],
+        aff_node_rows, aff_refs["ref"] == aff_node_rows["node_id"],
         "left_anti",
     )
     if missing_node_cap is not None:
@@ -121,47 +140,45 @@ def calc_update_tiles(nodes: DataFrame, way_refs: DataFrame,
                 "disagree"
             )
     new_wc = _way_cells(
-        way_bboxes(aff_refs, merged_nodes, salt_buckets=0),
+        way_bboxes(aff_refs, aff_node_rows, salt_buckets=0),
         buffer, max_level,
     )
     merged_wc = (
         way_cells_df.join(affected_ways, "way_id", "left_anti")
         .unionByName(new_wc)
     )
+    bid = batch_id or "b1"
+    spark = nodes.sparkSession
+    if store is not None:
+        merged_wc = store.run_stage(
+            spark, f"way_cells@{bid}", lambda: merged_wc
+        )
+        new_wc = merged_wc.join(affected_ways, "way_id", "left_semi")
 
-    affected_nodes = (
-        aff_refs.select(F.col("ref").alias("node_id"))
-        .unionByName(changed_ids)
-        .distinct()
-        .join(deleted_ids, "node_id", "left_anti")
-    )
     # parents of affected nodes only; Common over MERGED way cells
     parent_refs = way_refs.join(
         affected_nodes, way_refs["ref"] == affected_nodes["node_id"],
         "left_semi",
     )
     new_nc = _node_cells(
-        merged_nodes.join(affected_nodes, "node_id", "left_semi"),
-        parent_refs, merged_wc, buffer, max_level,
+        aff_node_rows, parent_refs, merged_wc, buffer, max_level,
     )
     merged_nc = (
-        node_cells_df.join(
-            affected_nodes.unionByName(deleted_ids).distinct(),
-            "node_id", "left_anti",
-        )
+        node_cells_df.join(touched_nodes, "node_id", "left_anti")
         .unionByName(new_nc)
     )
+    if store is not None:
+        merged_nc = store.run_stage(
+            spark, f"node_cells@{bid}", lambda: merged_nc
+        )
+        new_nc = merged_nc.join(affected_nodes, "node_id", "left_semi")
 
     old_cells = (
         way_cells_df.join(affected_ways, "way_id", "left_semi")
         .select("cell")
         .unionByName(
-            node_cells_df.join(
-                changed_ids.unionByName(
-                    affected_nodes.select("node_id")
-                ).distinct(),
-                "node_id", "left_semi",
-            ).select("cell")
+            node_cells_df.join(touched_nodes, "node_id", "left_semi")
+            .select("cell")
         )
     )
     new_cells = new_wc.select("cell").unionByName(new_nc.select("cell"))
@@ -171,8 +188,7 @@ def calc_update_tiles(nodes: DataFrame, way_refs: DataFrame,
         .select(cell_round("cell", group_level).alias("tile_cell"))
         .distinct()
     )
-
-    out = {
+    return {
         "nodes": merged_nodes,
         "way_cells": merged_wc,
         "node_cells": merged_nc,
@@ -181,16 +197,6 @@ def calc_update_tiles(nodes: DataFrame, way_refs: DataFrame,
         "affected_tiles": affected_tiles,
         "missing_refs": missing_refs,
     }
-    if store is not None:
-        bid = batch_id or "b1"
-        spark = nodes.sparkSession
-        out["way_cells"] = store.run_stage(
-            spark, f"way_cells@{bid}", lambda: merged_wc
-        )
-        out["node_cells"] = store.run_stage(
-            spark, f"node_cells@{bid}", lambda: merged_nc
-        )
-    return out
 
 
 def latest_version(df: DataFrame, key_cols, order_cols) -> DataFrame:
@@ -356,29 +362,61 @@ def merge_changes(base: DataFrame, changes: DataFrame, key: str,
     base: (key, *val_cols); changes: (key, seq, change_type, *val_cols).
     The newest change per key wins (filterLastObj), then:
       delete -> row removed; modify/create -> change values replace base;
-      keys without changes pass through.
+      keys without changes pass through; a change of an unseen key that
+      is not a delete inserts the key (with NULL values unless it is a
+      modify/create).
     """
-    # equal-seq ties break by the full (seq, change_type, values...) tuple
-    # descending — the identical total order the streaming filterLastObj
-    # (streaming/changes.py stream_latest_version) applies, so batch and
-    # incremental paths always pick the same winner
-    last = latest_version(
+    return _merge_latest(
+        base, _latest_changes(changes, key, ct_col, seq_col, val_cols),
+        key, ct_col, val_cols,
+    )
+
+
+def _latest_changes(changes: DataFrame, key: str, ct_col: str,
+                    seq_col: str, val_cols) -> DataFrame:
+    """The newest change per key.  Equal-seq ties break by the full (seq,
+    change_type, values...) tuple descending — the identical total order
+    the streaming filterLastObj (streaming/changes.py
+    stream_latest_version) applies, so batch and incremental paths always
+    pick the same winner."""
+    return latest_version(
         changes, [key],
         [(seq_col, "desc"), (ct_col, "desc")]
         + [(v, "desc") for v in val_cols],
     )
-    merged = base.alias("b").join(
-        last.alias("c"), F.col(f"b.{key}") == F.col(f"c.{key}"), "full_outer"
-    )
+
+
+def _merge_latest(base: DataFrame, last: DataFrame, key: str, ct_col: str,
+                  val_cols) -> DataFrame:
+    """`merge_changes` over change rows already reduced to one per key.
+
+    The base rows LEFT JOIN the change-sized rows, plus the change rows
+    whose key the base lacks (found by a semi-join of the base keys
+    against them).  The change side is the small side of both joins, so
+    Spark broadcasts it and streams the base instead of shuffling it — a
+    full outer join shuffles both sides."""
     keep = F.col(f"c.{ct_col}").isNull() | (F.col(f"c.{ct_col}") != CT_DELETE)
-    out_cols = [
-        F.coalesce(F.col(f"b.{key}"), F.col(f"c.{key}")).alias(key)
-    ] + [
-        F.when(
-            F.col(f"c.{ct_col}").isin(CT_MODIFY, CT_CREATE), F.col(f"c.{v}")
+    replace = F.col(f"c.{ct_col}").isin(CT_MODIFY, CT_CREATE)
+    kept = (
+        base.alias("b")
+        .join(last.alias("c"), F.col(f"b.{key}") == F.col(f"c.{key}"),
+              "left")
+        .filter(keep)
+        .select(
+            F.col(f"b.{key}").alias(key),
+            *[F.when(replace, F.col(f"c.{v}")).otherwise(F.col(f"b.{v}"))
+              .alias(v) for v in val_cols],
         )
-        .otherwise(F.col(f"b.{v}"))
-        .alias(v)
-        for v in val_cols
-    ]
-    return merged.filter(keep).select(*out_cols)
+    )
+    base_keys = base.select(key).join(last.select(key), key, "left_semi")
+    inserted = (
+        last.join(base_keys, key, "left_anti").alias("c")
+        .filter(keep)
+        .select(
+            F.col(f"c.{key}").alias(key),
+            *[F.when(replace, F.col(f"c.{v}"))
+              .otherwise(F.lit(None).cast(base.schema[v].dataType))
+              .alias(v) for v in val_cols],
+        )
+    )
+    return kept.unionByName(inserted)

@@ -1,5 +1,5 @@
 """Snapshot + lineage bookkeeping: every pipeline stage lands in a
-snapshot-committed table with per-partition lineage rows, and a killed job
+snapshot-committed table with per-file lineage rows, and a killed job
 resumes from the last committed stage without recomputation.
 
 Local backend: Parquet directories + atomically-renamed JSON manifests (the
@@ -12,10 +12,21 @@ LocationsCache + tile files (/root/reference/locationscache/
 locationscache.go:32-54, update/update.go:343-472): the store IS the
 id->tile index that incremental update reads.
 
-Lineage row: (stage, partition_id, cell_min, cell_max, row_count, checksum,
-snapshot_id, wall_ms) — checksum is an order-insensitive sum of per-row
-xxhash64 over all columns, so two runs of a deterministic stage can be
-compared cheaply at table or partition level.
+A commit runs no Spark job beyond the write itself and, when it
+overwrites an existing stage, the checkpoint before it — a scan-only
+frame commits in one job, two on overwrite:
+  * lineage rows are per data file, in the shape of an Iceberg data-file
+    manifest entry: (stage, file, row_count, cell_min, cell_max, bytes,
+    snapshot_id) ~ (file_path, record_count, lower_bounds/upper_bounds of
+    the cell column, file_size_in_bytes).  They come from the Parquet
+    footers the write just produced, read on the driver — no Spark job;
+  * the stage checksum comes from a `DataFrame.observe` on the frame being
+    written, so the write job computes it in passing.  It is `row_checksum`
+    — an order-insensitive sum of per-row xxhash64 over all columns — so
+    two runs of a deterministic stage compare cheaply, and q58 re-derives
+    it from the stored Parquet with the same definition;
+  * the manifest records the commit's own metrics: row_count, checksum,
+    files, bytes and wall_ms.
 """
 
 from __future__ import annotations
@@ -24,35 +35,45 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
-def partition_lineage(df: DataFrame, cell_col: str | None = "cell") -> list:
-    """Per-partition lineage aggregation — the ONE definition of the
-    recorded metadata: (partition_id, cell_min, cell_max, row_count,
-    checksum).  checksum folds per-row xxhash64 to 32 bits before an
-    order-insensitive sum so the aggregate cannot overflow int64 under
-    ANSI mode.  Used by SnapshotStore.write at record time and by the
-    q58 gate's independent recompute over the stored parquet."""
-    cell_min = (
-        F.min(cell_col) if cell_col and cell_col in df.columns
-        else F.lit(None).cast("long")
+def row_checksum(cols) -> Column:
+    """The ONE definition of the stage checksum: per-row xxhash64 over
+    `cols`, folded to 32 bits before an order-insensitive sum so the int64
+    sum cannot overflow under ANSI mode (below 2^31 rows).  NULL over no
+    rows.  Observed by SnapshotStore.write at record time and recomputed by
+    the q58 gate over the stored Parquet."""
+    return F.sum(F.pmod(F.xxhash64(*cols), F.lit(1 << 32)))
+
+
+def _data_files(data_dir: str) -> list:
+    return sorted(
+        fn for fn in os.listdir(data_dir)
+        if not fn.startswith(("_", ".")) and fn.endswith(".parquet")
     )
-    cell_max = (
-        F.max(cell_col) if cell_col and cell_col in df.columns
-        else F.lit(None).cast("long")
-    )
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            cell_min.alias("cell_min"),
-            cell_max.alias("cell_max"),
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum(F.pmod(F.xxhash64(*df.columns),
-                         F.lit(4294967296))).alias("checksum"),
-        )
-    ).collect()
+
+
+def _footer_bounds(md, col: str | None) -> tuple:
+    """(min, max) of `col` over a file's row-group statistics; NULL when
+    the column is absent, the file has no rows or every value is NULL."""
+    lo = hi = None
+    if col is None:
+        return lo, hi
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        for j in range(rg.num_columns):
+            c = rg.column(j)
+            if c.path_in_schema != col:
+                continue
+            st = c.statistics
+            if st is None or not st.has_min_max:
+                continue
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+    return lo, hi
 
 
 class SnapshotStore:
@@ -81,11 +102,15 @@ class SnapshotStore:
 
     def write(self, spark: SparkSession, stage: str, df: DataFrame,
               cell_col: str | None = "cell") -> DataFrame:
-        """Materialize `df` as the stage's snapshot: write parquet, derive
-        per-partition lineage rows, then atomically commit the manifest."""
+        """Materialize `df` as the stage's snapshot with no job beyond the
+        write: observe the row count and `row_checksum` while writing, take one
+        lineage row per data file from its Parquet footer, then atomically
+        commit the manifest.  Returns the stored frame, read with `df`'s
+        schema so no schema-inference job runs."""
         t0 = time.time()
         data_dir = self._data_dir(stage)
-        if os.path.isdir(data_dir) and os.listdir(data_dir):
+        existed = os.path.isdir(data_dir)
+        if existed and os.listdir(data_dir):
             # overwrite of an EXISTING stage = the replay/self-heal
             # window, where df's lazy plan may read the very files this
             # overwrite is about to delete (a replayed batch derives its
@@ -96,30 +121,38 @@ class SnapshotStore:
             # cluster prefer a reliable checkpoint dir to localCheckpoint
             # if executor loss during recovery is a concern.
             df = df.localCheckpoint(eager=True)
-        df.write.mode("overwrite").parquet(data_dir)
-        # drop the shared file-index cache entry for the path — a reader
-        # that listed the pre-overwrite files would otherwise die
-        # FILE_NOT_EXIST on the deleted parts
-        spark.catalog.refreshByPath(data_dir)
-        written = spark.read.parquet(data_dir)
+        obs = Observation()
+        df.observe(
+            obs, F.count(F.lit(1)).alias("rows"),
+            row_checksum(df.columns).alias("checksum"),
+        ).write.mode("overwrite").parquet(data_dir)
+        if existed:
+            # drop the shared file-index cache entry for the path — a
+            # reader that listed the pre-overwrite files would otherwise
+            # die FILE_NOT_EXIST on the deleted parts.  A directory that
+            # did not exist before this write was never listed, so it has
+            # no entry to drop.
+            spark.catalog.refreshByPath(data_dir)
+        observed = obs.get
 
-        lineage = partition_lineage(written, cell_col)
-
+        col = cell_col if cell_col in df.columns else None
         snapshot_id = int(time.time() * 1000)
-        wall_ms = int((time.time() - t0) * 1000)
-        lineage_rows = [
-            {
-                "stage": stage,
-                "partition_id": int(r["_pid"]),
-                "cell_min": None if r["cell_min"] is None else int(r["cell_min"]),
-                "cell_max": None if r["cell_max"] is None else int(r["cell_max"]),
-                "row_count": int(r["row_count"]),
-                "checksum": None if r["checksum"] is None else int(r["checksum"]),
-                "snapshot_id": snapshot_id,
-                "wall_ms": wall_ms,
-            }
-            for r in lineage
-        ]
+        lineage_rows = []
+        for fn in _data_files(data_dir):
+            path = os.path.join(data_dir, fn)
+            md = pq.read_metadata(path)
+            lo, hi = _footer_bounds(md, col)
+            lineage_rows.append({
+                "stage": stage, "file": fn, "row_count": md.num_rows,
+                "cell_min": lo, "cell_max": hi,
+                "bytes": os.path.getsize(path), "snapshot_id": snapshot_id,
+            })
+        row_count = sum(r["row_count"] for r in lineage_rows)
+        if row_count != observed["rows"]:
+            raise RuntimeError(
+                f"stage {stage}: the data files hold {row_count} rows but "
+                f"the write observed {observed['rows']}; not committing"
+            )
         with open(
             os.path.join(self.root, "_lineage", f"{stage}.{snapshot_id}.json"),
             "w",
@@ -129,18 +162,17 @@ class SnapshotStore:
         manifest = {
             "stage": stage,
             "snapshot_id": snapshot_id,
-            "row_count": sum(r["row_count"] for r in lineage_rows),
-            "checksum": sum(
-                r["checksum"] or 0 for r in lineage_rows
-            ) % (1 << 63),
-            "wall_ms": wall_ms,
-            "n_partitions": len(lineage_rows),
+            "row_count": row_count,
+            "checksum": (observed["checksum"] or 0) % (1 << 63),
+            "files": len(lineage_rows),
+            "bytes": sum(r["bytes"] for r in lineage_rows),
+            "wall_ms": int((time.time() - t0) * 1000),
         }
         tmp = self._manifest_path(stage) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.rename(tmp, self._manifest_path(stage))  # the commit point
-        return written
+        return spark.read.schema(df.schema).parquet(data_dir)
 
     def run_stage(self, spark: SparkSession, stage: str, builder,
                   cell_col: str | None = "cell") -> DataFrame:

@@ -118,11 +118,13 @@ def stream_update_tiles(spark: SparkSession, store: SnapshotStore,
             # them while the old files still exist; the writes then can
             # neither die FILE_NOT_EXIST nor re-read half-overwritten
             # data.  First attempts (inputs = previous batch's stages)
-            # skip this — no extra cost on the happy path.
+            # skip this — no extra cost on the happy path.  The
+            # change-sized sets (affected_ways, affected_nodes) are
+            # already materialized by calc_update_tiles.
             out = {
                 k: (v.localCheckpoint(eager=True)
                     if k in ("nodes", "way_cells", "node_cells",
-                             "affected_tiles", "affected_ways") else v)
+                             "affected_tiles") else v)
                 for k, v in out.items()
             }
         store.write(spark, f"{base_stage}_wc@s{batch_id}",

@@ -217,3 +217,80 @@ def test_streaming_micro_batches(spark, store, tmp_path, synth):
     final = store.read(spark, _latest_stage(store, "sbase"))
     got = {r["key"]: r["val"] for r in final.collect()}
     assert got == {2: 25.0}
+
+
+def _jobs(spark, group, fn):
+    """Run `fn` under a fresh job group; return (result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_commit_is_one_write_job(spark, store, tmp_path):
+    src = str(tmp_path / "src")
+    spark.range(500).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("cell")
+    ).repartition(2).write.parquet(src)
+    scan = spark.read.parquet(src)
+
+    out, jobs = _jobs(spark, "commit-fresh",
+                      lambda: store.write(spark, "one", scan))
+    assert len(jobs) == 1
+    _, jobs = _jobs(spark, "commit-schema", lambda: out.schema)
+    assert jobs == []
+    _, jobs = _jobs(spark, "commit-overwrite",
+                    lambda: store.write(spark, "one", scan))
+    assert len(jobs) == 2  # the localCheckpoint, then the write
+
+    # the manifest's metrics come from the commit itself
+    m = store.manifest("one")
+    rows = store.lineage_rows("one")
+    rows = [r for r in rows if r["snapshot_id"] == m["snapshot_id"]]
+    data = sorted(f for f in os.listdir(store._data_dir("one"))
+                  if f.endswith(".parquet"))
+    assert sorted(r["file"] for r in rows) == data
+    assert m["files"] == len(data)
+    assert m["bytes"] == sum(
+        os.path.getsize(os.path.join(store._data_dir("one"), f))
+        for f in data)
+    assert m["row_count"] == 500 and m["wall_ms"] >= 0
+    assert min(r["cell_min"] for r in rows) == 0
+    assert max(r["cell_max"] for r in rows) == 1497
+
+
+def test_empty_and_null_cell_footer_rows(spark, store):
+    from osmquadtree_depreceated_spark.gate import q58_check_stage
+
+    empty = spark.createDataFrame([], "k long, cell long")
+    store.write(spark, "empty", empty)
+    rows = q58_check_stage(spark, store, "empty")
+    assert rows and all(
+        (r["row_count"], r["cell_min"], r["cell_max"]) == (0, None, None)
+        for r in rows)
+    assert store.manifest("empty")["row_count"] == 0
+
+    nulls = spark.createDataFrame([(1, None), (2, None)], "k long, cell long")
+    store.write(spark, "nulls", nulls)
+    rows = q58_check_stage(spark, store, "nulls")
+    assert sum(r["row_count"] for r in rows) == 2
+    assert all(r["cell_min"] is None and r["cell_max"] is None
+               for r in rows)
+
+
+def test_q58_check_catches_a_torn_stage(spark, store):
+    from osmquadtree_depreceated_spark.gate import q58_check_stage
+
+    df = spark.createDataFrame([(1, 5), (2, 9)], "k long, cell long")
+    store.write(spark, "torn", df.coalesce(1))
+    data = store._data_dir("torn")
+    # a stray part file written after the commit: rows the lineage never saw
+    df.limit(1).coalesce(1).write.mode("append").parquet(data)
+    with pytest.raises(AssertionError, match="q58"):
+        q58_check_stage(spark, store, "torn")

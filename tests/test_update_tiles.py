@@ -354,3 +354,80 @@ def test_streaming_pyramid_survives_replay_after_wc_commit(
     want = {tuple(r) for r in tile_pyramid(
         out["way_cells"], "cell", 18, sum_cols=("way_id",)).collect()}
     assert got == want
+
+
+def _full_outer_merge(base, changes, key, ct_col="change_type",
+                      seq_col="seq", val_cols=("val",)):
+    """Reference: the full-outer-join formulation of merge_changes that
+    the engine used before its left-join plan (same newest-wins order)."""
+    from osmquadtree_depreceated_spark.operators.update import (
+        latest_version,
+    )
+
+    last = latest_version(
+        changes, [key],
+        [(seq_col, "desc"), (ct_col, "desc")]
+        + [(v, "desc") for v in val_cols],
+    )
+    merged = base.alias("b").join(
+        last.alias("c"), F.col(f"b.{key}") == F.col(f"c.{key}"), "full_outer"
+    )
+    keep = F.col(f"c.{ct_col}").isNull() | (F.col(f"c.{ct_col}") != "delete")
+    return merged.filter(keep).select(
+        F.coalesce(F.col(f"b.{key}"), F.col(f"c.{key}")).alias(key),
+        *[F.when(F.col(f"c.{ct_col}").isin("modify", "create"),
+                 F.col(f"c.{v}")).otherwise(F.col(f"b.{v}")).alias(v)
+          for v in val_cols],
+    )
+
+
+_MERGE_BASE = [(1, 10.0), (2, 20.0), (3, 30.0)]
+_CHANGE_SCHEMA = "key long, seq long, change_type string, val double"
+
+
+@pytest.mark.parametrize("rows, want", [
+    # modify / create of an unseen id inserts the row
+    ([(7, 1, "modify", 70.0), (8, 1, "create", 80.0)],
+     {1: 10.0, 2: 20.0, 3: 30.0, 7: 70.0, 8: 80.0}),
+    # delete of an absent id changes nothing
+    ([(9, 1, "delete", 0.0)], {1: 10.0, 2: 20.0, 3: 30.0}),
+    # equal-seq duplicates: the full (seq, change_type, val) tuple decides
+    ([(1, 5, "modify", 11.0), (1, 5, "modify", 12.0),
+      (2, 3, "delete", 0.0), (2, 3, "modify", 21.0),
+      (4, 2, "create", 40.0), (4, 2, "create", 41.0)],
+     {1: 12.0, 2: 21.0, 3: 30.0, 4: 41.0}),
+    # a change type outside delete/modify/create keeps the base values,
+    # and inserts an unseen id with NULL values
+    ([(3, 1, "touch", 99.0), (5, 1, "touch", 55.0)],
+     {1: 10.0, 2: 20.0, 3: 30.0, 5: None}),
+    # an older delete loses to a newer create of the same id
+    ([(2, 1, "delete", 0.0), (2, 2, "create", 22.0), (3, 2, "delete", 0.0)],
+     {1: 10.0, 2: 22.0}),
+])
+def test_merge_changes_matches_full_outer_reference(spark, rows, want):
+    from osmquadtree_depreceated_spark.operators.update import merge_changes
+
+    base = spark.createDataFrame(_MERGE_BASE, "key long, val double")
+    changes = spark.createDataFrame(rows, _CHANGE_SCHEMA)
+    got = merge_changes(base, changes, "key")
+    ref = _full_outer_merge(base, changes, "key")
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(
+        map(tuple, ref.collect()), key=str)
+    assert {r["key"]: r["val"] for r in got.collect()} == want
+    assert got.schema == ref.schema
+
+
+def test_batch_merge_has_no_full_outer_join(spark, base):
+    nodes, way_refs, wc, nc = base
+    changes = spark.createDataFrame(
+        [(1, 1, "modify", -5_500_000, 505_500_000),
+         (100, 1, "create", 9_000_000, 519_000_000)],
+        "node_id long, seq long, change_type string, lon long, lat long",
+    )
+    merged = calc_update_tiles(nodes, way_refs, wc, nc, changes)["nodes"]
+    plan = merged._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" in plan and "FullOuter" not in plan
+    ref = _full_outer_merge(nodes, changes, "node_id",
+                            val_cols=("lon", "lat"))
+    assert {tuple(r) for r in merged.collect()} == {
+        tuple(r) for r in ref.collect()}
