@@ -85,13 +85,6 @@ def feature_collection(features: DataFrame,
     return features.groupBy().agg(agg)
 
 
-def write_geojson(features: DataFrame, path: str, group_cols=None) -> None:
-    """Write FeatureCollections as text files (WriteGeoJson,
-    geojson.go:159)."""
-    fc = feature_collection(features, group_cols)
-    fc.select("feature_collection").write.mode("overwrite").text(path)
-
-
 def relation_feature_json(df: DataFrame, id_col: str = "rel_id",
                           rings_col: str = "rings",
                           tags_col: str = "tags",

@@ -3882,11 +3882,12 @@ from ({q05_oracle()})"""
 
 # q59: STREAMING CalcUpdateTiles as a driver gate (previously pytest-only).
 # Three seq-ordered change micro-batches flow through stream_update_tiles
-# (streaming/changes.py): each batch runs the incremental pipeline against
-# the latest committed snapshot and commits the merged tables as the next
-# snapshot stages.  The batches deliberately exercise every cross-batch
-# interaction — modify-then-modify, create-then-delete, delete-then-
-# create, create-then-modify — so per-batch state genuinely composes.
+# (streaming/changes.py): each batch runs calc_update_tiles with the store
+# against the stages of the last committed batch (paired by its `nodes`
+# marker) and commits way_cells/node_cells/tiles/pyramid/nodes@s{batch}.
+# The batches deliberately exercise every cross-batch interaction —
+# modify-then-modify, create-then-delete, delete-then-create,
+# create-then-modify — so per-batch state genuinely composes.
 # Oracle: ONE full recompute over the final merged node set (the same
 # rule as q33, update/update.go:343-540 contract), via the shared
 # _update_tiles_oracle body with the three waves folded into one
@@ -3970,20 +3971,20 @@ def _q59_stream_run(spark, sf_dir):
     # guard on the LAST seed stage: store writes are overwrite-idempotent,
     # so an interrupted seeding (nodes committed, nc not) self-heals on
     # retry instead of poisoning the session with a half-seeded store
-    if not store.has("updg_nc"):
-        store.write(spark, "updg_nodes", nodes, None)
-        store.write(spark, "updg_wc",
+    if not store.has("node_cells"):
+        store.write(spark, "nodes", nodes, None)
+        store.write(spark, "way_cells",
                     way_cells(_way_bbox_df(spark), 0.05, 18), "cell")
         store.write(
-            spark, "updg_pyr",
-            tile_pyramid(store.read(spark, "updg_wc"), "cell", 18,
+            spark, "pyramid",
+            tile_pyramid(store.read(spark, "way_cells"), "cell", 18,
                          sum_cols=("way_id",)),
             "level",
         )
         store.write(
-            spark, "updg_nc",
+            spark, "node_cells",
             node_cells(nodes, way_refs,
-                       store.read(spark, "updg_wc"), 0.05, 18),
+                       store.read(spark, "way_cells"), 0.05, 18),
             "cell",
         )
     feed = os.path.join(work, "feed")
@@ -4012,8 +4013,7 @@ def _q59_stream_run(spark, sf_dir):
         .parquet(os.path.join(feed, "*"))
     )
     q = stream_update_tiles(
-        spark, store, "updg", way_refs, stream,
-        os.path.join(work, "ckpt"), maintain_pyramid=True,
+        spark, store, way_refs, stream, os.path.join(work, "ckpt"),
     )
     if not q.awaitTermination(600):
         q.stop()
@@ -4021,7 +4021,7 @@ def _q59_stream_run(spark, sf_dir):
             "q59 streaming update did not finish within 600s — refusing "
             "to read a partially-committed snapshot chain"
         )
-    committed = [s for s in range(3) if store.has(f"updg_nodes@s{s}")]
+    committed = [s for s in range(3) if store.has(f"nodes@s{s}")]
     if committed != [0, 1, 2]:
         raise AssertionError(
             f"q59: expected 3 committed streaming batches, got "
@@ -4038,8 +4038,8 @@ def q59_streaming_update_tiles(spark, sf_dir) -> DataFrame:
     from .streaming.changes import _latest_stage
 
     store = _q59_stream_run(spark, sf_dir)
-    final_wc = store.read(spark, _latest_stage(store, "updg_wc"))
-    final_nc = store.read(spark, _latest_stage(store, "updg_nc"))
+    final_wc = store.read(spark, _latest_stage(store, "way_cells"))
+    final_nc = store.read(spark, _latest_stage(store, "node_cells"))
     return (
         final_wc.select(
             F.lit("w").alias("etype"), F.col("way_id").alias("id"), "cell"
@@ -4058,8 +4058,8 @@ def q59_oracle() -> str:
 
 
 # q71: the STREAMED serving-stats pyramid, value-gated.  q59's stream
-# now maintains the pyramid snapshot per micro-batch (the q69 signed
-# delta folded in by streaming/changes.py under maintain_pyramid); this
+# maintains the pyramid snapshot per micro-batch (the q69 signed delta
+# folded in by streaming/changes.py::stream_update_tiles); this
 # gate reads the FINAL pyramid stage and must equal the full-recompute
 # pyramid over the fully-merged state — three batches of incremental
 # signed folds, end-to-end through the real file stream, with zero
@@ -4072,7 +4072,7 @@ def q71_streaming_pyramid(spark, sf_dir) -> DataFrame:
     from .streaming.changes import _latest_stage
 
     store = _q59_stream_run(spark, sf_dir)
-    return store.read(spark, _latest_stage(store, "updg_pyr")).select(
+    return store.read(spark, _latest_stage(store, "pyramid")).select(
         "level", "pcell", "n", "sum_way_id"
     )
 

@@ -84,11 +84,3 @@ def calculate_cte_fragments(source_sql: str, key_cols: str,
 )"""
     )
     return "\n".join(lines)
-
-
-def calculate_cte_sql(source_sql: str, key_cols: str, buffer: float = 0.05,
-                      max_level: int = 18, out_name: str = "cell") -> str:
-    """Standalone DuckDB query computing the buffered cell per row."""
-    frags = calculate_cte_fragments(source_sql, key_cols, buffer, max_level,
-                                    out_name)
-    return f"with {frags}\nselect * from l_cells"

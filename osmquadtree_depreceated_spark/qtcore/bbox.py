@@ -61,18 +61,3 @@ def point_in_poly(poly_lons, poly_lats, test_lons, test_lats):
         ).astype(np.float64) + xi.astype(np.float64)
     cross = straddle & (tx.astype(np.float64) < tp)
     return (cross.sum(axis=1) % 2).astype(bool)
-
-
-def ring_area(lons, lats):
-    """Signed shoelace area over mercator-projected coords, per the
-    reference's CalcRingArea (/root/reference/geometry/zorder.go:133-166):
-    positive = counter-clockwise.  Operates on one ring (1-D arrays)."""
-    from .quadtree import merc, to_float
-
-    if len(lons) < 3:
-        return 0.0
-    x = np.asarray(to_float(np.asarray(lons, dtype=np.int64)), dtype=np.float64)
-    y = merc(to_float(np.asarray(lats, dtype=np.int64)))
-    xj = np.roll(x, -1)
-    yj = np.roll(y, -1)
-    return float(np.sum(x * yj - xj * y) / 2.0)

@@ -52,12 +52,6 @@ def check_ring(ring) -> bool:
     return ring[0][0] == ring[-1][0]
 
 
-def join_rings(a, rev_a: bool, b, rev_b: bool):
-    """Concatenate two open ways sharing an endpoint (joinrings,
-    makegeometries.go:335-352)."""
-    return _join_exact(a, rev_a, b, rev_b)
-
-
 def _join_exact(a, rev_a, b, rev_b):
     # literal port: ans has len(a)+len(b)-1 slots; A fills [0, len(a)),
     # B fills [len(a)-1, ...) — B's first written slot overwrites A's last.

@@ -106,14 +106,6 @@ def cell_string(qt: int) -> str:
     return "".join(out)
 
 
-def cell_from_string(s: str) -> int:
-    # quadtree.go:270-293
-    ans = 0
-    for i, ch in enumerate(s):
-        ans |= "ABCD".index(ch) << (61 - 2 * i)
-    return ans | len(s)
-
-
 def cell_tuple(qt: int):
     # quadtree.go:181-203
     if qt == -1:
@@ -129,20 +121,6 @@ def cell_tuple(qt: int):
         if t & 2:
             y |= 1
     return (x, y, z)
-
-
-def cell_from_tuple(x: int, y: int, z: int) -> int:
-    # quadtree.go:253-268
-    if x == -1 and y == -1 and z == -1:
-        return -1
-    ans = 0
-    scale = 1
-    for i in range(z):
-        ans += (((x >> i) & 1) | (((y >> i) & 1) << 1)) * scale
-        scale *= 4
-    ans <<= 63 - 2 * z
-    ans |= z
-    return ans
 
 
 def round_cell(qt: int, level: int) -> int:

@@ -4,9 +4,13 @@ model) and Structured Streaming micro-batches.
 Reference semantics chain: filterLastObj (newest version per element in a
 batch, update.go:69-110) -> MergeOrigAndChange (delete/modify/create apply,
 mergechange.go:18-65) -> recompute affected tiles only (update.go:343-472).
-Here each applied batch commits a new snapshot in the SnapshotStore, so the
-stream is resumable: a killed consumer re-reads the last committed snapshot
-and (with checkpointed offsets) replays only unapplied batches.
+Here each applied batch commits new snapshot stages in the SnapshotStore, so
+the stream is resumable: a killed consumer reads the stages of the last
+committed batch and (with checkpointed offsets) replays only unapplied
+batches.  stream_update_tiles uses calc_update_tiles' stage names (`nodes`,
+`way_cells`, `node_cells`, `pyramid`, `tiles`, each `@s{batch}`) and pairs
+its inputs by the `nodes` commit marker, so a replay takes no branch of its
+own.
 """
 
 from __future__ import annotations
@@ -68,106 +72,55 @@ def stream_apply_changes(spark: SparkSession, store: SnapshotStore,
 
 
 def stream_update_tiles(spark: SparkSession, store: SnapshotStore,
-                        base_stage: str, way_refs: DataFrame,
-                        stream_df: DataFrame, checkpoint_dir: str,
-                        buffer: float = 0.05, max_level: int = 18,
-                        group_level: int = 12, transform=None,
-                        maintain_pyramid: bool = False):
-    """STREAMING CalcUpdateTiles: each micro-batch of node changes runs the
-    full incremental pipeline (operators/update.calc_update_tiles —
-    merge/affected-set/cell-recompute, update.go:343-540) against the
-    latest committed snapshot of the nodes / way-cell / node-cell tables,
-    then commits the merged tables plus the batch's affected-tile set as
-    the next snapshot stages.  Incremental-across-batches == one full
-    recompute over the merged input (asserted in pytest against the q33
-    oracle logic).
+                        way_refs: DataFrame, stream_df: DataFrame,
+                        checkpoint_dir: str, buffer: float = 0.05,
+                        max_level: int = 18, group_level: int = 12,
+                        transform=None):
+    """STREAMING CalcUpdateTiles: micro-batch b of node changes runs
+    operators/update.calc_update_tiles with the store (update.go:343-540),
+    which commits way_cells@s{b} and node_cells@s{b}; then tiles@s{b} (the
+    affected-tile set), pyramid@s{b} (the q69 pyramid plus the batch's
+    signed delta) and last nodes@s{b}, the batch's commit marker.  The
+    batches converge to one full recompute over the merged input (q59/q71).
 
-    Requires base stages `{base_stage}_nodes`, `{base_stage}_wc`,
-    `{base_stage}_nc` committed before starting.  stream_df: streaming
-    (node_id, seq, change_type, lon, lat) — or any streaming source plus
-    a `transform` mapping each micro-batch DataFrame to that shape (e.g.
-    a binaryFile stream of .osc diffs through
-    sources.osc.parse_osc_content + osc_node_changes).  Offsets
-    checkpoint to `checkpoint_dir`; already-committed batch stages are
-    skipped on replay — both halves of exactly-once resume.
-
-    `maintain_pyramid=True` additionally keeps the q69 serving-stats
-    pyramid current per batch (signed delta over the affected ways
-    folded into the latest `{base_stage}_pyr` snapshot, which must be
-    committed up front)."""
+    The store belongs to this stream and holds the base stages `nodes`,
+    `way_cells`, `node_cells` and `pyramid`.  A batch reads all four at
+    the last committed `nodes` marker, so it never reads a stage it
+    writes: a replay after a crash sees its first attempt's inputs and
+    `run_stage` reads back what already committed.  stream_df yields
+    (node_id, seq, change_type, lon, lat), or any rows `transform` maps to
+    that (e.g. binaryFile .osc diffs through sources.osc).  Offsets
+    checkpoint to `checkpoint_dir`; marked batches are skipped."""
+    from ..operators.tile_groups import pyramid_delta, pyramid_merge
     from ..operators.update import calc_update_tiles
 
     def _apply(batch_df: DataFrame, batch_id: int):
-        stage = f"{base_stage}_nodes@s{batch_id}"
-        if store.has(stage) or batch_df.isEmpty():
+        b = f"s{batch_id}"
+        if store.has(f"nodes@{b}") or batch_df.isEmpty():
             return
         if transform is not None:
             batch_df = transform(batch_df)
-        nodes = store.read(spark, _latest_stage(store,
-                                                f"{base_stage}_nodes"))
-        wc = store.read(spark, _latest_stage(store, f"{base_stage}_wc"))
-        nc = store.read(spark, _latest_stage(store, f"{base_stage}_nc"))
-        out = calc_update_tiles(
-            nodes, way_refs, wc, nc, batch_df,
-            buffer=buffer, max_level=max_level, group_level=group_level,
+        last = _latest_stage(store, "nodes")[len("nodes"):]
+        nodes, wc, nc, pyr = (
+            store.read(spark, t + last)
+            for t in ("nodes", "way_cells", "node_cells", "pyramid")
         )
-        if store.has(f"{base_stage}_wc@s{batch_id}"):
-            # REPLAY of a crashed batch: the latest wc/nc stages are this
-            # batch's own committed outputs, so every `out` plan reads
-            # the very files the re-writes below overwrite.  Materialize
-            # them while the old files still exist; the writes then can
-            # neither die FILE_NOT_EXIST nor re-read half-overwritten
-            # data.  First attempts (inputs = previous batch's stages)
-            # skip this — no extra cost on the happy path.  The
-            # change-sized sets (affected_ways, affected_nodes) are
-            # already materialized by calc_update_tiles.
-            out = {
-                k: (v.localCheckpoint(eager=True)
-                    if k in ("nodes", "way_cells", "node_cells",
-                             "affected_tiles") else v)
-                for k, v in out.items()
-            }
-        store.write(spark, f"{base_stage}_wc@s{batch_id}",
-                    out["way_cells"], "cell")
-        store.write(spark, f"{base_stage}_nc@s{batch_id}",
-                    out["node_cells"], "cell")
-        store.write(spark, f"{base_stage}_tiles@s{batch_id}",
-                    out["affected_tiles"], None)
-        if maintain_pyramid:
-            # serving-stats pyramid maintained per batch, q69-style:
-            # the signed affected-way delta (operators/tile_groups.py::
-            # pyramid_delta) folded into the latest committed pyramid
-            # (requires base `{base_stage}_pyr` committed up front).
-            #
-            # The OLD-side baseline is the wc stage PAIRED with the
-            # pyramid's own latest stage — NOT the global latest wc: on a
-            # crash-replay after wc@s{b} committed but pyr@s{b} didn't,
-            # the global latest wc is already the post-batch table and a
-            # delta against it would net to zero, silently dropping the
-            # batch from the pyramid forever.  The paired read keeps the
-            # replay delta identical to the first attempt (and a replay
-            # after BOTH committed folds a zero delta onto pyr@s{b} —
-            # overwrite-idempotent self-heal).  Both sides read the
-            # already-materialized parquet stages, so the delta job never
-            # re-runs the update DAG.
-            from ..operators.tile_groups import pyramid_delta, pyramid_merge
-
-            pyr_stage = _latest_stage(store, f"{base_stage}_pyr")
-            suffix = pyr_stage[len(f"{base_stage}_pyr"):]
-            wc_baseline = store.read(spark, f"{base_stage}_wc{suffix}")
-            wc_after = store.read(spark, f"{base_stage}_wc@s{batch_id}")
-            delta = pyramid_delta(
-                wc_baseline.select("way_id", "cell"),
-                wc_after.select("way_id", "cell"),
-                out["affected_ways"], "way_id", "cell", max_level,
-                sum_cols=("way_id",),
-            )
-            store.write(spark, f"{base_stage}_pyr@s{batch_id}",
-                        pyramid_merge(store.read(spark, pyr_stage), delta),
-                        "level")
-        # nodes stage last: its presence marks the batch fully committed
-        # (the skip guard above keys on it)
-        store.write(spark, stage, out["nodes"], None)
+        out = calc_update_tiles(
+            nodes, way_refs, wc, nc, batch_df, buffer=buffer,
+            max_level=max_level, group_level=group_level, store=store,
+            batch_id=b,
+        )
+        store.run_stage(spark, f"tiles@{b}", lambda: out["affected_tiles"],
+                        None)
+        store.run_stage(
+            spark, f"pyramid@{b}",
+            lambda: pyramid_merge(pyr, pyramid_delta(
+                wc, out["way_cells"], out["affected_ways"], "way_id",
+                "cell", max_level, sum_cols=("way_id",),
+            )),
+            "level",
+        )
+        store.write(spark, f"nodes@{b}", out["nodes"], None)
 
     return (
         stream_df.writeStream.foreachBatch(_apply)

@@ -46,6 +46,44 @@ def _full(spark, nodes, way_refs):
     )
 
 
+_CHANGE_COLS = "node_id long, seq long, change_type string, lon long, lat long"
+
+
+def _stream_store(spark, base, root):
+    """A SnapshotStore seeded with the four base stages a stream reads."""
+    from osmquadtree_depreceated_spark.operators.tile_groups import (
+        tile_pyramid,
+    )
+    from osmquadtree_depreceated_spark.plans.lineage import SnapshotStore
+
+    nodes, _, wc, nc = base
+    store = SnapshotStore(str(root))
+    store.write(spark, "nodes", nodes, None)
+    store.write(spark, "way_cells", wc, "cell")
+    store.write(spark, "node_cells", nc, "cell")
+    store.write(spark, "pyramid",
+                tile_pyramid(wc, "cell", 18, sum_cols=("way_id",)), "level")
+    return store
+
+
+def _parquet_stream(spark, feed, batches):
+    """A file stream yielding one micro-batch per row list, in order."""
+    import time
+
+    feed.mkdir()
+    for i, rows in enumerate(batches):
+        # one file per micro-batch; increasing mtimes keep source order
+        spark.createDataFrame(rows, _CHANGE_COLS).coalesce(1).write.parquet(
+            str(feed / f"b{i}")
+        )
+        time.sleep(0.05)
+    return (
+        spark.readStream.schema(_CHANGE_COLS)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(feed / "*"))
+    )
+
+
 def test_incremental_equals_full_and_touches_minimum(spark, base):
     nodes, way_refs, wc, nc = base
     changes = spark.createDataFrame(
@@ -109,24 +147,16 @@ def test_streaming_update_tiles_equals_full_recompute(spark, base, tmp_path):
     (stream_update_tiles) converge to exactly the tables a single full
     recompute over the fully-merged input produces (the q33 oracle rule),
     with one committed snapshot chain per batch."""
-    import time
-
-    from osmquadtree_depreceated_spark.plans.lineage import SnapshotStore
-    from osmquadtree_depreceated_spark.streaming.changes import (
-        stream_update_tiles,
-    )
-
     from osmquadtree_depreceated_spark.operators.tile_groups import (
         tile_pyramid,
     )
+    from osmquadtree_depreceated_spark.streaming.changes import (
+        _latest_stage,
+        stream_update_tiles,
+    )
 
     nodes, way_refs, wc, nc = base
-    store = SnapshotStore(str(tmp_path / "store"))
-    store.write(spark, "upd_nodes", nodes, None)
-    store.write(spark, "upd_wc", wc, "cell")
-    store.write(spark, "upd_nc", nc, "cell")
-    store.write(spark, "upd_pyr",
-                tile_pyramid(wc, "cell", 18, sum_cols=("way_id",)), "level")
+    store = _stream_store(spark, base, tmp_path / "store")
 
     batches = [
         [(1, 1, "modify", -5_500_000, 505_500_000)],
@@ -135,43 +165,24 @@ def test_streaming_update_tiles_equals_full_recompute(spark, base, tmp_path):
         [(100, 3, "modify", 9_100_000, 519_100_000),
          (3, 3, "modify", 3_200_000, 515_200_000)],
     ]
-    schema = "node_id long, seq long, change_type string, lon long, lat long"
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    for i, rows in enumerate(batches):
-        # one file per micro-batch; increasing mtimes keep source order
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(feed / f"b{i}")
-        )
-        time.sleep(0.05)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(feed / "*"))
-    )
-    q = stream_update_tiles(
-        spark, store, "upd", way_refs, stream,
-        str(tmp_path / "ckpt"), maintain_pyramid=True,
-    )
+    stream = _parquet_stream(spark, tmp_path / "feed", batches)
+    q = stream_update_tiles(spark, store, way_refs, stream,
+                            str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     # at least one committed batch chain, and the LATEST snapshots equal a
     # full recompute over the cumulative merged nodes
-    committed = [s for s in range(8) if store.has(f"upd_nodes@s{s}")]
+    committed = [s for s in range(8) if store.has(f"nodes@s{s}")]
     assert committed, "no streaming batch committed"
-    from osmquadtree_depreceated_spark.streaming.changes import (
-        _latest_stage,
-    )
 
-    final_nodes = store.read(spark, _latest_stage(store, "upd_nodes"))
-    final_wc = store.read(spark, _latest_stage(store, "upd_wc"))
-    final_nc = store.read(spark, _latest_stage(store, "upd_nc"))
+    final_nodes = store.read(spark, _latest_stage(store, "nodes"))
+    final_wc = store.read(spark, _latest_stage(store, "way_cells"))
+    final_nc = store.read(spark, _latest_stage(store, "node_cells"))
 
     # expected: batch-mode sequential application of the same batches
     cur_n, cur_wc, cur_nc = nodes, wc, nc
     for rows in batches:
-        ch = spark.createDataFrame(rows, schema)
+        ch = spark.createDataFrame(rows, _CHANGE_COLS)
         out = calc_update_tiles(cur_n, way_refs, cur_wc, cur_nc, ch)
         cur_n, cur_wc, cur_nc = (
             out["nodes"], out["way_cells"], out["node_cells"],
@@ -188,15 +199,11 @@ def test_streaming_update_tiles_equals_full_recompute(spark, base, tmp_path):
     assert got_nc == want_nc_
     # per-batch affected-tile sets committed alongside
     for s in committed:
-        assert store.has(f"upd_tiles@s{s}")
-        assert store.has(f"upd_pyr@s{s}")
+        assert store.has(f"tiles@s{s}")
+        assert store.has(f"pyramid@s{s}")
     # the incrementally-maintained pyramid equals a recompute over the
     # final way-cell table (q69's rule, held across every batch)
-    from osmquadtree_depreceated_spark.streaming.changes import (
-        _latest_stage as _ls,
-    )
-
-    final_pyr = store.read(spark, _ls(store, "upd_pyr"))
+    final_pyr = store.read(spark, _latest_stage(store, "pyramid"))
     want_pyr = tile_pyramid(final_wc, "cell", 18, sum_cols=("way_id",))
     assert ({tuple(r) for r in final_pyr.collect()}
             == {tuple(r) for r in want_pyr.collect()})
@@ -210,7 +217,6 @@ def test_streaming_osc_wire_format_update_tiles(spark, base, tmp_path):
     import gzip
     import time
 
-    from osmquadtree_depreceated_spark.plans.lineage import SnapshotStore
     from osmquadtree_depreceated_spark.sources.osc import (
         osc_node_changes,
         parse_osc_content,
@@ -220,11 +226,8 @@ def test_streaming_osc_wire_format_update_tiles(spark, base, tmp_path):
         stream_update_tiles,
     )
 
-    nodes, way_refs, wc, nc = base
-    store = SnapshotStore(str(tmp_path / "store"))
-    store.write(spark, "osc_nodes", nodes, None)
-    store.write(spark, "osc_wc", wc, "cell")
-    store.write(spark, "osc_nc", nc, "cell")
+    _, way_refs, _, _ = base
+    store = _stream_store(spark, base, tmp_path / "store")
 
     # two wire-format diffs: modify node 1, then delete 7 + create 100
     # (coords in float degrees; ftoi turns them into the fixed-point ints)
@@ -250,12 +253,12 @@ def test_streaming_osc_wire_format_update_tiles(spark, base, tmp_path):
         .load(str(feed))
     )
     q = stream_update_tiles(
-        spark, store, "osc", way_refs, stream, str(tmp_path / "ckpt"),
+        spark, store, way_refs, stream, str(tmp_path / "ckpt"),
         transform=lambda b: osc_node_changes(parse_osc_content(b)),
     )
     q.awaitTermination(120)
 
-    final_nodes = store.read(spark, _latest_stage(store, "osc_nodes"))
+    final_nodes = store.read(spark, _latest_stage(store, "nodes"))
     got_n = {r["node_id"]: (r["lon"], r["lat"])
              for r in final_nodes.collect()}
     assert got_n[1] == (-5_500_000, 505_500_000)  # ftoi of -0.55/50.55
@@ -263,8 +266,8 @@ def test_streaming_osc_wire_format_update_tiles(spark, base, tmp_path):
     assert got_n[100] == (9_000_000, 519_000_000)
     # incremental tables equal the full recompute over the merged nodes
     want_w, want_nc_ = _full(spark, final_nodes, way_refs)
-    final_wc = store.read(spark, _latest_stage(store, "osc_wc"))
-    final_nc = store.read(spark, _latest_stage(store, "osc_nc"))
+    final_wc = store.read(spark, _latest_stage(store, "way_cells"))
+    final_nc = store.read(spark, _latest_stage(store, "node_cells"))
     got_w = {r["way_id"]: r["cell"] for r in final_wc.collect()}
     got_nc = {r["node_id"]: r["cell"] for r in final_nc.collect()}
     assert got_w == want_w
@@ -302,58 +305,91 @@ def test_missing_node_cap(spark):
 
 def test_streaming_pyramid_survives_replay_after_wc_commit(
         spark, base, tmp_path):
-    """Crash-replay hole regression: if a batch's wc@s0 stage committed
-    but the pyramid stage (and the nodes commit marker) did not, the
-    replay must compute the delta against the wc stage PAIRED with the
-    pyramid's latest stage — a delta against the global-latest wc (the
-    already-post-batch wc@s0) nets to zero and silently drops the batch
-    from the pyramid forever."""
-    import time
-
+    """Crash-replay hole regression: if a batch's way_cells@s0 stage
+    committed but the pyramid stage (and the nodes commit marker) did not,
+    the replay must compute the delta against the way cells of the last
+    committed batch — a delta against the already-post-batch way_cells@s0
+    nets to zero and silently drops the batch from the pyramid forever."""
     from osmquadtree_depreceated_spark.operators.tile_groups import (
         tile_pyramid,
     )
-    from osmquadtree_depreceated_spark.plans.lineage import SnapshotStore
     from osmquadtree_depreceated_spark.streaming.changes import (
         _latest_stage,
         stream_update_tiles,
     )
 
     nodes, way_refs, wc, nc = base
-    store = SnapshotStore(str(tmp_path / "store"))
-    store.write(spark, "rep_nodes", nodes, None)
-    store.write(spark, "rep_wc", wc, "cell")
-    store.write(spark, "rep_nc", nc, "cell")
-    store.write(spark, "rep_pyr",
-                tile_pyramid(wc, "cell", 18, sum_cols=("way_id",)),
-                "level")
-
+    store = _stream_store(spark, base, tmp_path / "store")
     rows = [(1, 1, "modify", -5_500_000, 505_500_000),
             (7, 1, "delete", None, None)]
-    schema = "node_id long, seq long, change_type string, lon long, lat long"
-    ch = spark.createDataFrame(rows, schema)
+    ch = spark.createDataFrame(rows, _CHANGE_COLS)
 
-    # simulate the crash window: the batch's post-change wc stage is
+    # simulate the crash window: the batch's post-change way-cell stage is
     # already committed, the pyramid stage and the nodes marker are not
     out = calc_update_tiles(nodes, way_refs, wc, nc, ch)
-    store.write(spark, "rep_wc@s0", out["way_cells"], "cell")
+    store.write(spark, "way_cells@s0", out["way_cells"], "cell")
 
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    ch.coalesce(1).write.parquet(str(feed / "b0"))
-    time.sleep(0.05)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(feed / "*")))
-    q = stream_update_tiles(spark, store, "rep", way_refs, stream,
-                            str(tmp_path / "ckpt"), maintain_pyramid=True)
+    stream = _parquet_stream(spark, tmp_path / "feed", [rows])
+    q = stream_update_tiles(spark, store, way_refs, stream,
+                            str(tmp_path / "ckpt"))
     assert q.awaitTermination(120)
-    assert store.has("rep_nodes@s0")
+    assert store.has("nodes@s0")
 
     got = {tuple(r) for r in store.read(
-        spark, _latest_stage(store, "rep_pyr")).collect()}
+        spark, _latest_stage(store, "pyramid")).collect()}
     want = {tuple(r) for r in tile_pyramid(
         out["way_cells"], "cell", 18, sum_cols=("way_id",)).collect()}
     assert got == want
+
+
+def test_streaming_replay_keeps_old_tiles(spark, base, tmp_path):
+    """A batch that crashed after way_cells@s0 and node_cells@s0 committed
+    replays against the base stages, not against its own outputs, so its
+    tiles@s0 still holds the tile that way 10 moved out of."""
+    from osmquadtree_depreceated_spark.streaming.changes import (
+        stream_update_tiles,
+    )
+
+    nodes, way_refs, wc, nc = base
+    store = _stream_store(spark, base, tmp_path / "store")
+    rows = [(1, 1, "modify", 50_000_000, 505_000_000)]
+    out = calc_update_tiles(nodes, way_refs, wc, nc,
+                            spark.createDataFrame(rows, _CHANGE_COLS))
+    store.write(spark, "way_cells@s0", out["way_cells"], "cell")
+    store.write(spark, "node_cells@s0", out["node_cells"], "cell")
+
+    stream = _parquet_stream(spark, tmp_path / "feed", [rows])
+    q = stream_update_tiles(spark, store, way_refs, stream,
+                            str(tmp_path / "ckpt"))
+    assert q.awaitTermination(120)
+    assert store.has("nodes@s0")
+    got = {r["tile_cell"] for r in store.read(spark, "tiles@s0").collect()}
+    want = {r["tile_cell"] for r in out["affected_tiles"].collect()}
+    assert got == want
+
+
+def test_store_path_reruns_no_python_udf(spark, base, tmp_path):
+    """With a store, node cells and affected tiles read the committed
+    way-cell snapshot, so neither executed plan runs the cell UDF again;
+    without one, both re-run the lazy way-cell chain."""
+    _, way_refs, _, _ = base
+    store = _stream_store(spark, base, tmp_path / "store")
+    changes = spark.createDataFrame(
+        [(1, 1, "modify", -5_500_000, 505_500_000)], _CHANGE_COLS)
+    nodes, wc, nc = (store.read(spark, t)
+                     for t in ("nodes", "way_cells", "node_cells"))
+
+    def udf_nodes(out):
+        plans = [out[k]._jdf.queryExecution().executedPlan().toString()
+                 for k in ("node_cells", "affected_tiles")]
+        return [("ArrowEvalPython" in p) or ("BatchEvalPython" in p)
+                for p in plans]
+
+    assert udf_nodes(calc_update_tiles(
+        nodes, way_refs, wc, nc, changes, store=store, batch_id="s0",
+    )) == [False, False]
+    assert udf_nodes(calc_update_tiles(
+        nodes, way_refs, wc, nc, changes)) == [True, True]
 
 
 def _full_outer_merge(base, changes, key, ct_col="change_type",

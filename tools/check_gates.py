@@ -34,7 +34,8 @@ def main():
     from pyspark.sql import SparkSession
 
     try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CHECK_CPUS", "8"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CHECK_CPUS",
+                                  len(os.sched_getaffinity(0))))
     except ValueError:
         sys.exit("SPARK_GRAFT_CHECK_CPUS must be an integer thread count "
                  "(it sizes both local[N] and the shuffle partitions)")
