@@ -33,7 +33,15 @@ def apply_engine_conf(spark) -> None:
     flag off the reader ignores bucket metadata, the join re-shuffles,
     and assert_colocated correctly refuses to run — so a hosting
     session that disabled bucketing for an unrelated reason would fail
-    the gate.  Both confs are runtime-settable.
+    the gate.
+    spark.sql.cteRecursionRowLimit=-1 — the relation closure
+    (operators/calcqts.rel_paths) is a WITH RECURSIVE plan whose depth
+    column bounds the recursion; its row count grows with the relation
+    table (about 5 walks per rel->rel edge) and is not a termination
+    guard.  Spark's default of 1,000,000 rows would fail a closure over
+    200k+ nested-relation edges with RECURSION_ROW_LIMIT_EXCEEDED.
+    All three confs are runtime-settable.
     """
     spark.conf.set("spark.sql.unionOutputPartitioning", "false")
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
+    spark.conf.set("spark.sql.cteRecursionRowLimit", "-1")

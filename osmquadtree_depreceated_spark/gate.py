@@ -246,7 +246,7 @@ join fb_cells f on n.node_id = f.node_id"""
 
 
 def q05_rel_cells(spark, sf_dir) -> DataFrame:
-    """Relation cells: Common over member-way cells with the 5-round
+    """Relation cells: Common over member-way cells with the 5-edge
     rel->rel closure machinery (resortwaynodes.go:767-824)."""
     _prep(spark, sf_dir)
     wcells = way_cells(_way_bbox_df(spark), 0.05, 18)
@@ -254,7 +254,7 @@ def q05_rel_cells(spark, sf_dir) -> DataFrame:
         "rel_id", F.lit("w").alias("mtype"), F.col("member_way").alias("ref")
     )
     empty_nodes = spark.createDataFrame([], "node_id long, cell long")
-    return relation_cells(members, wcells, empty_nodes, rounds=5)
+    return relation_cells(members, wcells, empty_nodes)
 
 
 def q05_oracle() -> str:
@@ -1764,7 +1764,7 @@ def _complete_ways(spark, region_pred) -> DataFrame:
 def q29_complete_ways(spark, sf_dir) -> DataFrame:
     """Complete-ways spatial extract (FindObjsFilter + FilterObjs,
     filter/filter.go:288-408): region nodes -> touching ways -> all their
-    nodes -> relations (5 rounds), members trimmed."""
+    nodes -> relations (5-edge closure), members trimmed."""
     _prep(spark, sf_dir)
     region = (
         (F.col("lon") >= -1000000) & (F.col("lon") <= 1000000)
@@ -4732,7 +4732,7 @@ def q72_rel_pyramid(spark, sf_dir) -> DataFrame:
         "rel_id", F.lit("w").alias("mtype"), F.col("member_way").alias("ref")
     )
     empty_nodes = spark.createDataFrame([], "node_id long, cell long")
-    rc = relation_cells(members, wcells, empty_nodes, rounds=5)
+    rc = relation_cells(members, wcells, empty_nodes)
     sent = spark.createDataFrame(_Q72_SENTINELS, "rel_id long, cell long")
     return tile_pyramid(rc.unionByName(sent), "cell", 18,
                         sum_cols=("rel_id",))

@@ -7,7 +7,8 @@ Reference semantics (/root/reference/calcqts/resortwaynodes.go):
   * node cell = Common over parent-way cells, else point-box cell
                 Calculate((lon,lat,lon+1,lat+1), 0.05, 18)   (:696-709)
   * rel cell  = Common over member node/way cells; empty members -> 0;
-                self-circular -> 0; rel->rel closure x5 rounds (:767-824)
+                self-circular -> 0; rel->rel closure within 5 edges,
+                one bounded recursive plan (:767-824)
 
 The reference achieves this with external spills + goroutine merges; here
 each step is one shuffle-stage expressed natively so Catalyst/AQE pick the
@@ -117,21 +118,54 @@ def node_cells(nodes: DataFrame, way_refs: DataFrame, wcells: DataFrame,
     )
 
 
+# Longest rel->rel path both relation closures follow: the reference's
+# fixed round count (resortwaynodes.go:767-824, filter.go:288-345).
+REL_CLOSURE_DEPTH = 5
+
+
+def rel_paths(rel_members: DataFrame) -> DataFrame:
+    """Distinct (rel_id, desc_id) pairs: each relation with itself, and
+    with every id reachable from it within REL_CLOSURE_DEPTH rel->rel
+    edges (dangling child refs included; callers join them away).
+
+    One bounded `WITH RECURSIVE` plan.  Its anchor is the rel->rel edges
+    only, so tables without nested relations recurse over zero rows; the
+    depth column bounds the recursion.  Spark allows only UNION ALL in a
+    recursive CTE, so the CTE emits walks and one distinct follows.
+    """
+    edges = rel_members.filter(F.col("mtype") == "r").select(
+        "rel_id", F.col("ref").alias("child_id")
+    )
+    walks = rel_members.sparkSession.sql(
+        "with recursive w(rel_id, desc_id, depth) as ("
+        " select rel_id, child_id, 1 from {edges}"
+        " union all"
+        " select w.rel_id, e.child_id, w.depth + 1"
+        " from w join {edges} e on w.desc_id = e.rel_id"
+        f" where w.depth < {REL_CLOSURE_DEPTH})"
+        " select rel_id, desc_id from w",
+        edges=edges,
+    )
+    selves = rel_members.select("rel_id", F.col("rel_id").alias("desc_id"))
+    return selves.unionByName(walks).distinct()
+
+
 def relation_cells(rel_members: DataFrame, wcells: DataFrame,
-                   ncells: DataFrame, rounds: int = 5) -> DataFrame:
+                   ncells: DataFrame) -> DataFrame:
     """Relation cells (resortwaynodes.go:767-824).
 
     rel_members(rel_id, mtype in ('n','w','r'), ref).
     Base pass: Common over node-member and way-member cells.  Empty-member
-    relations get 0; a self-referencing relation with no value gets 0.  Then
-    `rounds` iterations propagate child-relation cells upward (nested
-    hierarchies); anything still unresolved stays Null (-1), mirroring the
-    reference's "missing rel qts" accounting.
+    relations get 0; a self-referencing relation with no value gets 0.
+    Then child-relation cells propagate upward (nested hierarchies) over
+    REL_CLOSURE_DEPTH rounds; anything still unresolved stays Null (-1),
+    mirroring the reference's "missing rel qts" accounting.
 
-    Scale: the rel table is orders of magnitude smaller than nodes/ways; the
-    closure loop is `rounds` small self-joins — each a cheap shuffle, and the
-    loop count is fixed (5) rather than data-dependent, exactly like the
-    reference.
+    The rounds are one fold: Common is associative, commutative and
+    idempotent with NULL as identity, so r synchronous rounds equal the
+    Common over every relation's paths of length <= r (`rel_paths`).
+    Scale: the rel table is orders of magnitude smaller than nodes/ways;
+    the closure is one recursive plan, one join and one group-by.
     """
     members_n = (
         rel_members.filter(F.col("mtype") == "n")
@@ -176,7 +210,7 @@ def relation_cells(rel_members: DataFrame, wcells: DataFrame,
         cur.join(empty_rels, "rel_id", "left")
         .join(self_circ, "rel_id", "left")
         .select(
-            "rel_id",
+            F.col("rel_id").alias("desc_id"),
             F.when(F.col("_empty"), F.lit(0).cast("long"))
             .when(F.col("cell").isNotNull(), F.col("cell"))
             .when(F.col("_circ"), F.lit(0).cast("long"))
@@ -185,56 +219,10 @@ def relation_cells(rel_members: DataFrame, wcells: DataFrame,
         )
     )
 
-    rel_rel = rel_members.filter(F.col("mtype") == "r").select(
-        "rel_id", F.col("ref").alias("child_id")
+    closed = with_common_finish(
+        rel_paths(rel_members).join(cur, "desc_id")
+        .groupBy("rel_id")
+        .agg(*common_agg("cell")),
+        out="cell",
     )
-
-    # No rel->rel edges: the closure rounds are identities — skip them (one
-    # cheap existence probe instead of 5 wasted shuffle stages).
-    if rel_rel.limit(1).isEmpty():
-        rounds = 0
-
-    for _ in range(rounds):
-        child_cells = with_common_finish(
-            rel_rel.join(
-                cur.filter(F.col("cell").isNotNull()).select(
-                    F.col("rel_id").alias("child_id"),
-                    F.col("cell").alias("child_cell"),
-                ),
-                "child_id",
-            )
-            .groupBy("rel_id")
-            .agg(*common_agg("child_cell")),
-            out="from_children",
-        ).select("rel_id", "from_children")
-        cur = cur.join(child_cells, "rel_id", "left").select(
-            "rel_id",
-            F.coalesce(
-                common_pair_expr("cell", "from_children"), F.col("cell")
-            ).alias("cell"),
-        )
-        # Cut lineage between rounds: CollapseProject would otherwise inline
-        # each round's bit-math into the next — exponential expression growth
-        # that OOMs the optimizer by round 5.  The rel table is tiny relative
-        # to nodes/ways; in production each round lands in the snapshot store
-        # (plans/lineage.py) instead of executor memory.
-        cur = cur.localCheckpoint(eager=False)
-    return cur.select("rel_id", F.coalesce("cell", F.lit(-1)).alias("cell"))
-
-
-def common_pair_expr(a: str, b: str):
-    """Common of two cell columns (either nullable) as one native expression:
-    the distributed finish (oracle/sqlgen.common_finish_sql) applied to the
-    two-element set, with NULL as identity (quadtree.go:216-221)."""
-    from ..oracle.sqlgen import SPARK, common_finish_sql
-
-    fin = common_finish_sql(
-        SPARK,
-        f"least({a} & -32, {b} & -32)",
-        f"greatest({a} & -32, {b} & -32)",
-        f"least({a} & 31, {b} & 31)",
-    )
-    return F.expr(
-        f"case when {a} is null then {b} when {b} is null then {a} "
-        f"else {fin} end"
-    )
+    return closed.select("rel_id", F.coalesce("cell", F.lit(-1)).alias("cell"))

@@ -6,26 +6,27 @@ Reference semantics (/root/reference/filter/filter.go:288-345 FindObjsFilter,
   2. ways touching ANY kept node are kept;
   3. ALL nodes of kept ways are added (complete-ways);
   4. relations are kept if a member node-in-region / kept-way / kept-relation
-     is present — rel->rel closure runs 5 rounds; crucially the step-3 extra
-     nodes do NOT count for relation membership (the reference merges them
-     into the id set only after the rounds);
+     is present — rel->rel closure over paths of at most 5 edges;
+     crucially the step-3 extra nodes do NOT count for relation membership
+     (the reference merges them into the id set only after the rounds);
   5. apply: keep elements whose (type, id) is in the set; relation members
      are trimmed to kept ids (osmosis --clip-incomplete-relations) and
      relations left memberless are dropped.
 
-Spark shape: each step is a semi-join; the relation closure is a fixed
-5-iteration loop of small joins.  The region predicate is any Column
-(bbox natively, polygon via the pnpoly kernel).
+Spark shape: each step is a semi-join; the relation closure is one more,
+against the bounded recursive plan of calcqts.rel_paths.  The region
+predicate is any Column (bbox natively, polygon via the pnpoly kernel).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .calcqts import rel_paths
+
 
 def find_objs_filter(nodes: DataFrame, way_refs: DataFrame,
-                     rel_members: DataFrame, region_pred: Column,
-                     rounds: int = 5) -> dict:
+                     rel_members: DataFrame, region_pred: Column) -> dict:
     """Discover the kept id sets.  nodes(node_id, lon, lat);
     way_refs(way_id, pos, ref); rel_members(rel_id, mtype in n/w/r, ref).
     Returns {'nodes': DF[node_id], 'ways': DF[way_id], 'rels': DF[rel_id]}.
@@ -54,24 +55,17 @@ def find_objs_filter(nodes: DataFrame, way_refs: DataFrame,
     m_way = rel_members.filter(F.col("mtype") == "w").join(
         kept_ways, rel_members["ref"] == kept_ways["way_id"], "leftsemi"
     )
-    kept_rels = m_node.select("rel_id").unionByName(
-        m_way.select("rel_id")
-    ).distinct()
+    base_rels = m_node.select("rel_id").unionByName(m_way.select("rel_id"))
 
-    rel_rel = rel_members.filter(F.col("mtype") == "r").select(
-        "rel_id", F.col("ref").alias("child_id")
+    # rel->rel closure: a relation is kept when a path of at most
+    # REL_CLOSURE_DEPTH edges reaches a base-kept one (itself included)
+    kept_rels = (
+        rel_paths(rel_members)
+        .join(base_rels.withColumnRenamed("rel_id", "desc_id"), "desc_id",
+              "leftsemi")
+        .select("rel_id")
+        .distinct()
     )
-    if not rel_rel.limit(1).isEmpty():
-        for _ in range(rounds):
-            via_child = (
-                rel_rel.join(
-                    kept_rels.withColumnRenamed("rel_id", "child_id"),
-                    "child_id", "leftsemi",
-                )
-                .select("rel_id")
-            )
-            kept_rels = kept_rels.unionByName(via_child).distinct()
-            kept_rels = kept_rels.localCheckpoint(eager=False)
 
     kept_nodes = region_nodes.unionByName(all_way_nodes).distinct()
     return {"nodes": kept_nodes, "ways": kept_ways, "rels": kept_rels}

@@ -181,3 +181,28 @@ def test_union_output_partitioning_defect_still_present(spark):
         "spark.sql.unionOutputPartitioning=true no longer mis-plans — "
         "upstream fixed; apply_engine_conf's override is now redundant"
     )
+
+
+def test_relation_closure_needs_no_row_limit(spark):
+    """The relation closure's recursion is bounded by its depth column,
+    not by a row count: a 250k-edge chain emits about 1.25M walks, which
+    completes under the engine conf and exceeds Spark's default
+    cteRecursionRowLimit of 1,000,000."""
+    from osmquadtree_depreceated_spark.operators.calcqts import rel_paths
+
+    n = 250_000
+    chain = spark.range(n).select(
+        F.col("id").alias("rel_id"), F.lit("r").alias("mtype"),
+        (F.col("id") + 1).alias("ref"),
+    )
+    paths = rel_paths(chain)
+    # n self pairs plus n - d + 1 pairs at each depth d = 1..5
+    assert paths.count() == n + sum(n - d + 1 for d in range(1, 6))
+    key = "spark.sql.cteRecursionRowLimit"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.unset(key)
+        with pytest.raises(Exception, match="RECURSION_ROW_LIMIT_EXCEEDED"):
+            rel_paths(chain).count()
+    finally:
+        spark.conf.set(key, old)

@@ -86,6 +86,27 @@ class TestCompleteWays:
         assert (103, "r", 100) in kept
         assert all(rid != 101 for rid, _, _ in kept)
 
+    def test_relation_closure_depth_and_cycle(self, spark, mini_world):
+        nodes, way_refs, _ = mini_world
+        region = (
+            (F.col("lon") >= -1000000) & (F.col("lon") <= 1000000)
+            & (F.col("lat") >= 509000000) & (F.col("lat") <= 511000000)
+        )
+        chain = list(range(200, 207))  # 206 -> 205 -> ... -> 200 -> way 10
+        members = [(200, "w", 10)]
+        members += [(a, "r", b) for a, b in zip(chain[1:], chain)]
+        members += [
+            # 3-cycle with one kept way member; a 2-cycle reaching nothing
+            (300, "r", 301), (301, "r", 302), (302, "r", 300),
+            (301, "w", 10), (310, "r", 311), (311, "r", 310),
+        ]
+        rel_members = spark.createDataFrame(
+            members, "rel_id long, mtype string, ref long")
+        ids = find_objs_filter(nodes, way_refs, rel_members, region)
+        # 205 reaches 200 in 5 edges; 206 needs 6
+        assert {r[0] for r in ids["rels"].collect()} == (
+            set(chain[:6]) | {300, 301, 302})
+
 
 class TestMedia:
     def test_blob_plumbing_and_stub_features(self, spark, sf_dir):
