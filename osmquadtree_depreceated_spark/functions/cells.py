@@ -207,19 +207,3 @@ def with_common_finish(df, out: str = "cell",
         *[c for c in df.columns if c.startswith(t)], min_col, max_col,
         mind_col
     )
-
-
-def bbox_intersects(a: dict, b: dict) -> Column:
-    """Native bbox-overlap predicate; a/b map minx/miny/maxx/maxy to column
-    names or SQL fragments (bbox.go:59-73)."""
-    return F.expr(sqlgen.bbox_intersects_sql(a, b))
-
-
-def contains_xy(minx, miny, maxx, maxy, x, y) -> Column:
-    """Native point-containment predicate (bbox.go:93-107)."""
-    return (
-        (F.expr(_sql_of(minx)) <= F.expr(_sql_of(x)))
-        & (F.expr(_sql_of(miny)) <= F.expr(_sql_of(y)))
-        & (F.expr(_sql_of(maxx)) >= F.expr(_sql_of(x)))
-        & (F.expr(_sql_of(maxy)) >= F.expr(_sql_of(y)))
-    )

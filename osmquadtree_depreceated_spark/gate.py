@@ -20,17 +20,13 @@ from .functions.cells import (
 )
 from .operators.ann import cosine_topk
 from .operators.calcqts import node_cells, relation_cells, way_bboxes, way_cells
-from .operators.spatial_join import (
-    bbox_join,
-    knn_join,
-    point_in_polygon_join,
-    raster_vector_join,
-)
+from .operators.spatial_join import bbox_join, knn_join, raster_vector_join
 from .operators.update import latest_version, merge_changes
 from .oracle import sqlgen
 from .oracle.duck_calc import calculate_cte_fragments
 from .oracle.sqlgen import DUCK
 from .sources import tpch
+from .sources.poly import PolyRegion, poly_region_filter
 
 # ---------------------------------------------------------------- constants
 
@@ -299,10 +295,12 @@ def q06_oracle() -> str:
 
 
 def q07_pip_join(spark, sf_dir) -> DataFrame:
-    """Point-in-polygon join (pnpoly crossing number, bbox.go:158-194)."""
+    """Point-in-polygon join (pnpoly crossing number, bbox.go:158-194): a
+    one-section region filter, as ReadPolyFile unwraps a single-section
+    file (filter/poly.go:179-242)."""
     _prep(spark, sf_dir)
-    return point_in_polygon_join(
-        spark.table("nodes"), POLY_LONS, POLY_LATS
+    return poly_region_filter(
+        spark.table("nodes"), PolyRegion(polys=[(POLY_LONS, POLY_LATS)])
     ).select("node_id")
 
 
@@ -3212,7 +3210,7 @@ def q47_poly_filter(spark, sf_dir) -> DataFrame:
     import os
     import tempfile
 
-    from .sources.poly import poly_region_filter, read_poly_file
+    from .sources.poly import read_poly_file
 
     fd, path = tempfile.mkstemp(suffix=".poly")
     try:

@@ -6,7 +6,6 @@ from .calcqts import (  # noqa: F401
 )
 from .spatial_join import (  # noqa: F401
     bbox_join,
-    point_in_polygon_join,
     knn_join,
     raster_vector_join,
 )

@@ -1,12 +1,12 @@
-"""Spatial join operators: bbox join, point-in-polygon, kNN, raster↔vector.
+"""Spatial join operators: bbox join, kNN, raster↔vector.
 
 Reference serving path: tile-level prune (cell Bounds with buffer 0.05) then
 per-row bbox intersect (/root/reference/packeddatastore/packeddatastore.go:
-382-425); polygon filtering via pnpoly (filter/poly.go:37-108); kNN is
-graft-new (north_rule) — cell-neighborhood expansion with a brute-force
-fallback oracle.
+382-425); kNN is graft-new (north_rule) — cell-neighborhood expansion with a
+brute-force fallback oracle.  Point-in-polygon filtering is a one-section
+region filter (sources/poly.py::poly_region_filter, filter/poly.go:37-108).
 
-Scale design: query sets (boxes/polygons/query points) are small dimension
+Scale design: query sets (boxes/query points) are small dimension
 tables — always broadcast.  The data side is pruned FIRST on the cell key
 (partition/file pruning when the table is written partitioned by
 cell_round(cell, K)), and only survivors evaluate the exact predicate.
@@ -18,27 +18,31 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions.cells import cell_round, with_cell_tuple
-from ..functions.udfs import point_in_poly_udf
+
+# bbox_join's cover depth and the buffer the cells were calculated with
+# (0.05, resortwaynodes.go:615)
+_PRUNE_LEVEL = 8
+_CELL_BUFFER = 0.05
+# knn_cell_join's histogram depth
+_HIST_LEVEL = 10
 
 
 def bbox_join(queries: DataFrame, geoms: DataFrame,
-              prune_cells: bool = True, prune_level: int = 8,
-              cell_buffer: float = 0.05, cell_col: str = "cell") -> DataFrame:
+              cell_col: str = "cell") -> DataFrame:
     """queries(query_id, qminx, qminy, qmaxx, qmaxy) × geoms(..., minx, miny,
     maxx, maxy[, cell]) -> rows of geoms intersecting each query box.
 
     Tile prune then residual intersect, mirroring packeddatastore.go:382-425:
-    when `prune_cells` and geoms carries `cell_col`, each query box expands
-    to its buffered cover cells at depths <= `prune_level`
-    (qtcore.cover_cells) and the join becomes a broadcast EQUI-join on
-    cell_round(cell, prune_level) — a hash join Catalyst can plan, and with
-    a table partitioned/bucketed on the rounded cell key, partition/file
-    pruning instead of a scan.  Only cover survivors evaluate the exact
-    bbox predicate, so results are identical to the unpruned join (the
-    cover set provably contains every intersecting geometry's rounded
-    cell).  `cell_buffer` MUST match the buffer the cells were calculated
-    with (0.05, resortwaynodes.go:615).  Null/invalid cells round up to the
-    root cover cell and fall back to the residual test.
+    when geoms carries `cell_col`, each query box expands to its buffered
+    cover cells at depths <= 8 (qtcore.cover_cells) and the join becomes a
+    broadcast EQUI-join on cell_round(cell, 8) — a hash join Catalyst can
+    plan, and with a table partitioned/bucketed on the rounded cell key,
+    partition/file pruning instead of a scan.  Only cover survivors evaluate
+    the exact bbox predicate, so results are identical to the unpruned join
+    (the cover set provably contains every intersecting geometry's rounded
+    cell).  The cells must have been calculated with buffer 0.05.
+    Null/invalid cells round up to the root cover cell and fall back to the
+    residual test.
 
     Without a cell column the join degrades to the broadcast
     nested-loop-with-residual baseline.
@@ -49,7 +53,7 @@ def bbox_join(queries: DataFrame, geoms: DataFrame,
         & (F.col("maxx") >= F.col("qminx"))
         & (F.col("maxy") >= F.col("qminy"))
     )
-    if prune_cells and cell_col in geoms.columns:
+    if cell_col in geoms.columns:
         from ..qtcore import cover_cells
 
         spark = geoms.sparkSession
@@ -60,7 +64,7 @@ def bbox_join(queries: DataFrame, geoms: DataFrame,
             cover = cover_cells(
                 int(r["qminx"]), int(r["qminy"]),
                 int(r["qmaxx"]), int(r["qmaxy"]),
-                prune_level, cell_buffer,
+                _PRUNE_LEVEL, _CELL_BUFFER,
             )
             base = tuple(r[c] for c in qcols)
             cand_rows.extend(base + (int(c),) for c in cover)
@@ -71,7 +75,7 @@ def bbox_join(queries: DataFrame, geoms: DataFrame,
             + [StructField("__prefix", LongType(), False)]
         )
         cand = spark.createDataFrame(cand_rows, cand_schema)
-        rounded = cell_round(f"greatest({cell_col}, 0L)", prune_level)
+        rounded = cell_round(f"greatest({cell_col}, 0L)", _PRUNE_LEVEL)
         return (
             geoms.withColumn("__rc", rounded)
             .join(broadcast(cand), F.col("__rc") == F.col("__prefix"),
@@ -80,26 +84,6 @@ def bbox_join(queries: DataFrame, geoms: DataFrame,
             .drop("__rc", "__prefix")
         )
     return geoms.join(broadcast(queries), cond, "inner")
-
-
-def point_in_polygon_join(points: DataFrame, poly_lons, poly_lats,
-                          lon_col: str = "lon", lat_col: str = "lat",
-                          prefilter_bbox: bool = True) -> DataFrame:
-    """Filter points to those inside ONE polygon (crossing-number,
-    bbox.go:158-194).  A native bbox prefilter (the polygon's envelope)
-    prunes the bulk before the Arrow-vectorized exact test — the same
-    tile-prune-then-residual shape as the reference's LocTest
-    (filter/poly.go:37-108)."""
-    df = points
-    if prefilter_bbox:
-        df = df.filter(
-            (F.col(lon_col) >= int(min(poly_lons)))
-            & (F.col(lon_col) <= int(max(poly_lons)))
-            & (F.col(lat_col) >= int(min(poly_lats)))
-            & (F.col(lat_col) <= int(max(poly_lats)))
-        )
-    pip = point_in_poly_udf(poly_lons, poly_lats)
-    return df.filter(pip(F.col(lon_col), F.col(lat_col)))
 
 
 def knn_join(queries: DataFrame, points: DataFrame, k: int,
@@ -144,20 +128,19 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int,
 def knn_cell_join(queries, points: DataFrame, k: int,
                   lon_col: str = "lon", lat_col: str = "lat",
                   id_col: str = "node_id", spark=None,
-                  hist_level: int = 10,
                   plan_capture: list | None = None) -> DataFrame:
     """kNN via cell-neighborhood expansion (graft-new per north_rule) —
     EXACT: returns the same rows as knn_join (ties by id ascending).
 
-    Scale design (driver holds O(queries + occupied level-`hist_level`
-    cells), never per-point or per-deep-cell state):
+    Scale design (driver holds O(queries + occupied level-10 cells), never
+    per-point or per-deep-cell state):
 
-      1. ONE coarse histogram — counts per cell_round(cell, hist_level) —
+      1. ONE coarse histogram — counts per cell_round(cell, 10) —
          is collected (at planet scale this is the tile-group statistic,
          ~10^5 rows at level 10, not the tens of millions of depth-18
-         cells).  Prefix counts at any level <= hist_level are exact range
+         cells).  Prefix counts at any level <= 10 are exact range
          sums over it.
-      2. Each query starts at the deepest level <= hist_level whose
+      2. Each query starts at the deepest level <= 10 whose
          enclosing prefix holds >= k candidates.
       3. Escalation rounds are whole-batch DataFrame jobs: candidates =
          one broadcast equi-join on the rounded cell, top-k by window; the
@@ -194,8 +177,7 @@ def knn_cell_join(queries, points: DataFrame, k: int,
         pts = with_point_cell(points, lon_col, lat_col, "cell", 18)
     pts = pts.cache()
 
-    hist_level = min(int(hist_level), 18)
-    coarse = cell_round("cell", hist_level)
+    coarse = cell_round("cell", _HIST_LEVEL)
     hist = (
         pts.groupBy(coarse.alias("ccell"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -209,7 +191,7 @@ def knn_cell_join(queries, points: DataFrame, k: int,
 
     def _prefix_count(qcell: int, level: int) -> int:
         # contiguous key range of coarse cells under the level-L prefix
-        # (valid for L <= hist_level: coarse keys sort within their prefix)
+        # (valid for L <= _HIST_LEVEL: coarse keys sort within their prefix)
         lo = int(round_cells(np.array([qcell]), level)[0]) & ~31
         width = 1 << (63 - 2 * level)
         lo_i = np.searchsorted(hcells, lo, side="left")
@@ -224,7 +206,7 @@ def knn_cell_join(queries, points: DataFrame, k: int,
 
     levels = {}
     for i, qid in enumerate(qids):
-        lvl = hist_level
+        lvl = _HIST_LEVEL
         while lvl > 0 and _prefix_count(int(qcells[i]), lvl) < k:
             lvl -= 1
         levels[int(qid)] = lvl

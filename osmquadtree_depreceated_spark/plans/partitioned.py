@@ -22,9 +22,7 @@ PART_COL = "part_cell"
 
 
 def write_cell_partitioned(df: DataFrame, path: str, level: int = 6,
-                           cell_col: str = "cell",
-                           max_records_per_file: int | None = None,
-                           salt_partitions: int = 1) -> None:
+                           cell_col: str = "cell") -> None:
     """Write `df` partitioned by cell_round(cell, level).  Null/invalid
     cells land in partition 0 (the root), mirroring the reference's
     null-qt -> tile 0 rule (update.go:451-456).
@@ -36,46 +34,17 @@ def write_cell_partitioned(df: DataFrame, path: str, level: int = 6,
     contiguous write.
 
     Hot-cell skew (one cell holding a large share of the rows — a dense
-    metro tile at planet scale) gets two measured knobs
-    (BENCH/HOTCELL_AB.md):
-
-    * ``max_records_per_file`` caps ROWS PER FILE via the writer's
-      maxRecordsPerFile option — bounds file size (and the memory of any
-      later per-file reader) without changing task layout;
-    * ``salt_partitions=k`` spreads each partition VALUE over up to k
-      write tasks (repartition on (PART_COL, deterministic row-hash % k))
-      — bounds the straggler TASK TIME the single hot-cell task would
-      otherwise take, at the cost of up to k files per cold cell.
-
-    Defaults keep the unsalted single-file-per-cell layout: it is the
-    fastest shape when cells are balanced (the common case after
-    tile-group splitting, operators/tile_groups.py)."""
+    metro tile at planet scale) makes that one task a straggler writing
+    one unbounded file.  The per-file row cap and salted spread once
+    offered for it were set by no caller and measured only on a 32-core
+    box (BENCH/HOTCELL_AB.md), so the write keeps one file per cell: the
+    fastest shape when cells are balanced, as after tile-group splitting
+    (operators/tile_groups.py)."""
     out = df.withColumn(
         PART_COL, cell_round(f"greatest({cell_col}, 0L)", level)
     )
-    if salt_partitions > 1:
-        salt = F.pmod(
-            F.hash(*[F.col(c) for c in df.columns]),
-            F.lit(salt_partitions),
-        )
-        # explicit numPartitions: an adjustable (AQE-coalescible)
-        # repartition would merge the salted groups right back into one
-        # task on a small input, silently un-spreading the hot cell
-        n = max(
-            salt_partitions,
-            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        )
-        shuffled = out.repartition(n, F.col(PART_COL), salt)
-    else:
-        shuffled = out.repartition(PART_COL)
-    writer = shuffled.write
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(PART_COL).mode("overwrite").parquet(path)
-
-
-def read_cell_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    (out.repartition(PART_COL).write.partitionBy(PART_COL)
+     .mode("overwrite").parquet(path))
 
 
 # (appId, path, dir mtime) -> base DataFrame over the written layout.

@@ -28,7 +28,5 @@ from .quadtree import (  # noqa: F401
     point_cells_closed_form,
 )
 from .bbox import (  # noqa: F401
-    bbox_intersects,
-    bbox_contains_xy,
     point_in_poly,
 )

@@ -1,36 +1,13 @@
-"""Vectorized bbox and point-in-polygon kernels (fixed-point int64 coords).
+"""Vectorized point-in-polygon kernel (fixed-point int64 coords).
 
-Semantics follow /root/reference/quadtree/bbox.go:59-107 (intersect/contains)
-and :158-194 (pnpoly crossing number).  The reference's Contains has a known
-y/x typo (bbox.go:80) — we implement the documented-correct behavior; the
-divergence is recorded in FIXTURES.md §3.
+Semantics follow the reference's quadtree/bbox.go:158-194 (pnpoly crossing
+number).  The bbox intersect/contain predicates (bbox.go:59-107) are native
+Column expressions (oracle/sqlgen.py, operators/spatial_join.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-
-def bbox_intersects(aminx, aminy, amaxx, amaxy, bminx, bminy, bmaxx, bmaxy):
-    """Axis-aligned overlap (bbox.go:59-73).  Pure comparisons — in the
-    engine proper this is a native Column expression; this kernel exists for
-    UDF-side residual filtering and tests."""
-    return ~(
-        (np.asarray(aminx) > np.asarray(bmaxx))
-        | (np.asarray(aminy) > np.asarray(bmaxy))
-        | (np.asarray(amaxx) < np.asarray(bminx))
-        | (np.asarray(amaxy) < np.asarray(bminy))
-    )
-
-
-def bbox_contains_xy(minx, miny, maxx, maxy, x, y):
-    """Point containment (bbox.go:93-107)."""
-    return ~(
-        (np.asarray(minx) > np.asarray(x))
-        | (np.asarray(miny) > np.asarray(y))
-        | (np.asarray(maxx) < np.asarray(x))
-        | (np.asarray(maxy) < np.asarray(y))
-    )
 
 
 def point_in_poly(poly_lons, poly_lats, test_lons, test_lats):

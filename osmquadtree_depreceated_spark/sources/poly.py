@@ -16,10 +16,16 @@ nothing (single-section files work because ReadPolyFile unwraps them to
 locTestPolygon).  We implement the documented Osmosis semantics the code
 clearly intends; the single-section path is behavior-identical.
 
+`PolyRegion.contains` is the engine's one membership kernel: the point
+filter (q07's one-section polygon, q47, q52) and the tile corner tests
+(q49) all call it.  A one-polygon filter is a one-section region, as
+ReadPolyFile unwraps a single-section file to locTestPolygon.
+
 Scale: the region polygon is a tiny driver-side object closed over by one
 Arrow-vectorized pandas UDF (the broadcast-dim pattern); the bulk of the
 input is pruned natively by the union-envelope bbox prefilter before any
-Python executes — same prune-then-residual shape as point_in_polygon_join.
+Python executes — the LocTest prune-then-residual shape
+(filter/poly.go:37-108).
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BooleanType
 
+from ..qtcore.bbox import point_in_poly
 
 _INT_TOKEN = re.compile(r"^[+-]?[0-9]+$")
 _FLOAT_TOKEN = re.compile(
@@ -74,6 +81,24 @@ class PolyRegion:
         miny = min(min(lats) for _, lats in self.polys)
         maxy = max(max(lats) for _, lats in self.polys)
         return int(minx), int(miny), int(maxx), int(maxy)
+
+    def contains(self, x, y) -> np.ndarray:
+        """Membership of the int64 points (x, y): inside ANY outer section
+        and inside NO hole, pnpoly per section (qtcore.point_in_poly)."""
+        inside = np.zeros(len(x), dtype=bool)
+        for vx, vy in self.polys:
+            inside |= point_in_poly(vx, vy, x, y)
+        for vx, vy in self.holes:
+            inside &= ~point_in_poly(vx, vy, x, y)
+        return inside
+
+    def as_arrays(self) -> "PolyRegion":
+        """This region with every section as int64 arrays — converted once
+        on the driver, before a UDF closes over it."""
+        def arr(secs):
+            return [(np.asarray(lons, dtype=np.int64),
+                     np.asarray(lats, dtype=np.int64)) for lons, lats in secs]
+        return PolyRegion(self.name, arr(self.polys), arr(self.holes))
 
 
 def parse_poly(text: str) -> PolyRegion:
@@ -118,34 +143,6 @@ def read_poly_file(path: str) -> PolyRegion:
         return parse_poly(f.read())
 
 
-def region_contains_udf(region: PolyRegion):
-    """Arrow UDF (lon, lat) -> bool membership in the multi-section region:
-    pnpoly-true for any outer AND pnpoly-false for every hole.  One Python
-    stage for the whole region (sections loop over numpy arrays, not rows).
-    """
-    from ..qtcore.bbox import point_in_poly
-
-    polys = [(np.asarray(lons, dtype=np.int64),
-              np.asarray(lats, dtype=np.int64))
-             for lons, lats in region.polys]
-    holes = [(np.asarray(lons, dtype=np.int64),
-              np.asarray(lats, dtype=np.int64))
-             for lons, lats in region.holes]
-
-    @F.pandas_udf(BooleanType())
-    def _contains(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        x = lon.to_numpy(np.int64)
-        y = lat.to_numpy(np.int64)
-        inside = np.zeros(len(x), dtype=bool)
-        for vx, vy in polys:
-            inside |= point_in_poly(vx, vy, x, y)
-        for vx, vy in holes:
-            inside &= ~point_in_poly(vx, vy, x, y)
-        return pd.Series(inside)
-
-    return _contains
-
-
 def with_region_tile_tests(cells: DataFrame, region: PolyRegion,
                            cell_col: str = "cell",
                            buffer: float = 0.05) -> DataFrame:
@@ -159,7 +156,7 @@ def with_region_tile_tests(cells: DataFrame, region: PolyRegion,
 
     One Arrow stage: bounds from the vectorized descent kernel
     (qtcore.quadtree.cell_bounds, the same algebra q02's codecs verify),
-    corner membership via the vectorized pnpoly.
+    corner membership via PolyRegion.contains.
 
     DOCUMENTED DIVERGENCES (FIXTURES.md §3): the reference's
     Bbox.Contains compares Miny against the OTHER box's Minx
@@ -172,23 +169,9 @@ def with_region_tile_tests(cells: DataFrame, region: PolyRegion,
     this composes with the cover-prune serving path as a residual
     per-tile predicate."""
     from ..qtcore.quadtree import cell_bounds
-    from ..qtcore.bbox import point_in_poly
 
     eminx, eminy, emaxx, emaxy = region.envelope()
-    polys = [(np.asarray(lons, dtype=np.int64),
-              np.asarray(lats, dtype=np.int64))
-             for lons, lats in region.polys]
-    holes = [(np.asarray(lons, dtype=np.int64),
-              np.asarray(lats, dtype=np.int64))
-             for lons, lats in region.holes]
-
-    def _member(x, y):
-        inside = np.zeros(len(x), dtype=bool)
-        for vx, vy in polys:
-            inside |= point_in_poly(vx, vy, x, y)
-        for vx, vy in holes:
-            inside &= ~point_in_poly(vx, vy, x, y)
-        return inside
+    kernel = region.as_arrays()
 
     @F.pandas_udf("tile_intersects boolean, tile_contains boolean")
     def _tests(c: pd.Series) -> pd.DataFrame:
@@ -198,8 +181,8 @@ def with_region_tile_tests(cells: DataFrame, region: PolyRegion,
                  & (emaxx >= minx) & (emaxy >= miny))
         cont = ((eminx <= minx) & (eminy <= miny)
                 & (emaxx >= maxx) & (emaxy >= maxy))
-        cont &= _member(minx, miny) & _member(minx, maxy)
-        cont &= _member(maxx, miny) & _member(maxx, maxy)
+        cont &= kernel.contains(minx, miny) & kernel.contains(minx, maxy)
+        cont &= kernel.contains(maxx, miny) & kernel.contains(maxx, maxy)
         return pd.DataFrame(
             {"tile_intersects": inter, "tile_contains": cont}
         )
@@ -212,27 +195,23 @@ def with_region_tile_tests(cells: DataFrame, region: PolyRegion,
     )
 
 
-def poly_tile_filter(cells: DataFrame, region: PolyRegion,
-                     cell_col: str = "cell", buffer: float = 0.05,
-                     mode: str = "intersects") -> DataFrame:
-    """Keep cells whose tile passes the region test (`intersects` or
-    `contains`) — the tile-level prune a .poly region filter applies
-    before any per-element work."""
-    col = {"intersects": "tile_intersects",
-           "contains": "tile_contains"}[mode]
-    out = with_region_tile_tests(cells, region, cell_col, buffer)
-    return out.filter(F.col(col)).drop("tile_intersects", "tile_contains")
-
-
 def region_pred_column(region: PolyRegion, lon_col: str = "lon",
-                       lat_col: str = "lat",
-                       prefilter_bbox: bool = True) -> Column:
+                       lat_col: str = "lat") -> Column:
     """The region-membership predicate as ONE Column: native union-
     envelope conjunction first (Catalyst pushes it to the scan) AND the
-    exact Arrow pnpoly residual — usable anywhere a boolean Column fits
-    (point filters, the complete-ways closure seed, join conditions)."""
-    pred = region_contains_udf(region)(F.col(lon_col), F.col(lat_col))
-    if prefilter_bbox and region.polys:
+    exact Arrow residual, PolyRegion.contains — usable anywhere a boolean
+    Column fits (point filters, the complete-ways closure seed, join
+    conditions).  A region with no outer section has no envelope to
+    prune by; its residual keeps nothing."""
+    kernel = region.as_arrays()
+
+    @F.pandas_udf(BooleanType())
+    def _contains(lon: pd.Series, lat: pd.Series) -> pd.Series:
+        return pd.Series(kernel.contains(lon.to_numpy(np.int64),
+                                         lat.to_numpy(np.int64)))
+
+    pred = _contains(F.col(lon_col), F.col(lat_col))
+    if region.polys:
         minx, miny, maxx, maxy = region.envelope()
         pred = (
             (F.col(lon_col) >= minx) & (F.col(lon_col) <= maxx)
@@ -243,11 +222,9 @@ def region_pred_column(region: PolyRegion, lon_col: str = "lon",
 
 
 def poly_region_filter(points: DataFrame, region: PolyRegion,
-                       lon_col: str = "lon", lat_col: str = "lat",
-                       prefilter_bbox: bool = True) -> DataFrame:
+                       lon_col: str = "lon",
+                       lat_col: str = "lat") -> DataFrame:
     """Filter points to those inside the .poly region.  Native union-
     envelope prefilter (pruned at the scan via pushdown) then the exact
     Arrow residual — the LocTest prune-then-test shape (poly.go:37-108)."""
-    return points.filter(
-        region_pred_column(region, lon_col, lat_col, prefilter_bbox)
-    )
+    return points.filter(region_pred_column(region, lon_col, lat_col))

@@ -11,7 +11,6 @@ from osmquadtree_depreceated_spark.functions import (
     cell_round,
     cell_string,
     common_agg,
-    point_in_poly_udf,
 )
 from osmquadtree_depreceated_spark.functions.cells import (
     with_cell_tuple,
@@ -27,6 +26,10 @@ from osmquadtree_depreceated_spark.qtcore import (
     round_cells,
 )
 from osmquadtree_depreceated_spark.qtcore import scalar_ref as ref
+from osmquadtree_depreceated_spark.sources.poly import (
+    PolyRegion,
+    poly_region_filter,
+)
 
 RNG = np.random.default_rng(7)
 
@@ -133,13 +136,17 @@ def test_cell_of_bbox_udf_matches_numpy(spark):
 
 
 def test_point_in_poly_udf(spark):
+    # one polygon is a one-section region: the engine's only point filter
     poly_lon = [0, 10_000_000, 10_000_000, 5_000_000, 0]
     poly_lat = [500000000, 500000000, 510000000, 515000000, 510000000]
     n = 5000
     tx = RNG.integers(-2_000_000, 12_000_000, n)
     ty = RNG.integers(498000000, 517000000, n)
     df = spark.createDataFrame(pd.DataFrame({"i": np.arange(n), "x": tx, "y": ty}))
-    pip = point_in_poly_udf(poly_lon, poly_lat)
-    got = df.select("i", pip("x", "y").alias("inside")).orderBy("i").toPandas()
-    want = point_in_poly(np.array(poly_lon), np.array(poly_lat), tx, ty)
-    np.testing.assert_array_equal(got["inside"].values, want)
+    region = PolyRegion(polys=[(poly_lon, poly_lat)])
+    got = sorted(r.i for r in poly_region_filter(df, region, "x", "y")
+                 .select("i").collect())
+    want = np.flatnonzero(
+        point_in_poly(np.array(poly_lon), np.array(poly_lat), tx, ty))
+    assert len(want) > 0
+    np.testing.assert_array_equal(got, want)

@@ -10,7 +10,6 @@ from osmquadtree_depreceated_spark.operators.calcqts import (
 from osmquadtree_depreceated_spark.plans.partitioned import (
     PART_COL,
     pruned_tile_scan,
-    read_cell_partitioned,
     write_cell_partitioned,
 )
 from osmquadtree_depreceated_spark.sources import tpch
@@ -48,7 +47,7 @@ def test_pruned_scan_matches_full_filter(spark, table):
 
 def test_partition_pruning_skips_files(spark, table):
     path, _ = table
-    full = read_cell_partitioned(spark, path)
+    full = spark.read.parquet(path)
     n_partitions_total = full.select(PART_COL).distinct().count()
     assert n_partitions_total > 4  # the layout actually spread out
 
@@ -94,52 +93,3 @@ def test_dynamic_partition_pruning_on_tile_join(spark, table):
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan[:2500]
     assert joined.count() >= 0
-
-
-def test_hot_cell_cap_and_salt_spread(spark, tmp_path):
-    """Hot-cell skew knobs (BENCH/HOTCELL_AB.md): maxRecordsPerFile
-    bounds rows per file, and salt_partitions spreads one partition
-    VALUE over multiple write tasks (distinct part-NNNNN file stems in
-    the hot directory) instead of one straggler task."""
-    import glob
-    import os
-    import re
-
-    import pyarrow.parquet as pq
-
-    hot_key = (7 << 51) + LEVEL
-    cold = F.shiftleft(F.pmod(F.col("id"), 5), 51) + F.lit(LEVEL)
-    df = spark.range(20000).select(
-        "id",
-        F.when(F.pmod("id", 2) == 0, F.lit(hot_key)).otherwise(cold)
-        .alias("cell"),
-        (F.col("id") % 100).alias("minx"), (F.col("id") % 100).alias("miny"),
-        (F.col("id") % 100 + 1).alias("maxx"),
-        (F.col("id") % 100 + 1).alias("maxy"),
-    )
-    path = str(tmp_path / "hot")
-    # the salted shuffle needs bins >> (cells x salt) combos for the
-    # hash to spread the hot cell's salt groups into distinct tasks —
-    # true by construction at production shuffle-partition counts,
-    # arranged explicitly at test scale
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "64")
-    try:
-        write_cell_partitioned(df, path, level=LEVEL,
-                               max_records_per_file=1000,
-                               salt_partitions=4)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    files = glob.glob(os.path.join(path, "part_cell=*", "*.parquet"))
-    assert files
-    # the row cap holds for EVERY file
-    assert max(pq.ParquetFile(f).metadata.num_rows for f in files) <= 1000
-    # the hot cell's 10k rows came from >= 4 distinct write tasks
-    hot_dir = os.path.join(path, f"part_cell={hot_key}")
-    stems = {
-        re.match(r"part-(\d+)", os.path.basename(f)).group(1)
-        for f in glob.glob(os.path.join(hot_dir, "*.parquet"))
-    }
-    assert len(stems) >= 4, stems
-    # round-trip: nothing lost or duplicated
-    assert spark.read.parquet(path).count() == 20000

@@ -1,12 +1,23 @@
 """Osmosis .poly reader (sources/poly.py vs filter/poly.go:179-242)."""
 
+import numpy as np
 import pytest
 
-from osmquadtree_depreceated_spark.gate import POLY_FILE_TEXT
+from osmquadtree_depreceated_spark.gate import (
+    POLY_FILE_TEXT,
+    POLY_LATS,
+    POLY_LONS,
+)
+from osmquadtree_depreceated_spark.qtcore import (
+    point_cells_closed_form,
+    scalar_ref as SR,
+)
 from osmquadtree_depreceated_spark.sources.poly import (
     PolyRegion,
     parse_poly,
     poly_region_filter,
+    region_pred_column,
+    with_region_tile_tests,
 )
 
 
@@ -56,68 +67,42 @@ def test_filter_outer_minus_hole(spark):
     assert got == {1, 3}
 
 
-def test_single_section_matches_point_in_polygon_join(spark):
-    # single-section region ≡ the existing one-polygon operator
-    from osmquadtree_depreceated_spark.gate import POLY_LATS, POLY_LONS
-    from osmquadtree_depreceated_spark.operators.spatial_join import (
-        point_in_polygon_join,
-    )
+def _scalar_member(region, x, y):
+    # the multi-section rule over the independent scalar pnpoly port
+    return (any(SR.point_in_poly(lo, la, x, y) for lo, la in region.polys)
+            and not any(SR.point_in_poly(lo, la, x, y)
+                        for lo, la in region.holes))
 
-    pts = spark.createDataFrame(
-        [(i, (i * 977771) % 16000000 - 8000000,
-          500000000 + (i * 131071) % 18000000) for i in range(400)],
-        ["node_id", "lon", "lat"],
-    )
-    region = PolyRegion(polys=[(list(POLY_LONS), list(POLY_LATS))])
-    a = {r.node_id for r in poly_region_filter(pts, region).collect()}
-    b = {r.node_id for r in point_in_polygon_join(
-        pts, POLY_LONS, POLY_LATS).collect()}
-    assert a == b and a
+
+def _scalar_tile_tests(region, cell):
+    ex0, ey0, ex1, ey1 = region.envelope()
+    mnx, mny, mxx, mxy = SR.cell_bounds(cell, 0.05)
+    inter = ex0 <= mxx and ey0 <= mxy and ex1 >= mnx and ey1 >= mny
+    cont = (ex0 <= mnx and ey0 <= mny and ex1 >= mxx and ey1 >= mxy
+            and all(_scalar_member(region, x, y)
+                    for x in (mnx, mxx) for y in (mny, mxy)))
+    return inter, cont
+
+
+def _tile_tests(spark, region, cells):
+    df = spark.createDataFrame([(c,) for c in cells], ["cell"])
+    return {
+        r.cell: (r.tile_intersects, r.tile_contains)
+        for r in with_region_tile_tests(df, region).collect()
+    }
 
 
 def test_tile_tests_match_scalar_port(spark):
     # engine kernel vs the independent scalar port on a cell sample,
     # single outer section (reference-correct path)
-    from osmquadtree_depreceated_spark.gate import POLY_LATS, POLY_LONS
-    from osmquadtree_depreceated_spark.qtcore import scalar_ref as SR
-    from osmquadtree_depreceated_spark.sources.poly import (
-        with_region_tile_tests,
-    )
-
     region = PolyRegion(polys=[(list(POLY_LONS), list(POLY_LATS))])
-    ex0, ey0, ex1, ey1 = region.envelope()
     cells = [(((k * 2654435761) % (1 << 36)) << 27) | 18
              for k in range(40)]
-    df = spark.createDataFrame([(c,) for c in cells], ["cell"])
-    got = {
-        r.cell: (r.tile_intersects, r.tile_contains)
-        for r in with_region_tile_tests(df, region).collect()
-    }
-
-    def member(x, y):
-        return SR.point_in_poly(POLY_LONS, POLY_LATS, x, y)
-
+    got = _tile_tests(spark, region, cells)
     for c in cells:
-        mnx, mny, mxx, mxy = SR.cell_bounds(c, 0.05)
-        inter = ex0 <= mxx and ey0 <= mxy and ex1 >= mnx and ey1 >= mny
-        cont = (ex0 <= mnx and ey0 <= mny and ex1 >= mxx and ey1 >= mxy
-                and member(mnx, mny) and member(mnx, mxy)
-                and member(mxx, mny) and member(mxx, mxy))
-        assert got[c] == (inter, cont), hex(c)
-
-
-def test_poly_tile_filter_modes(spark):
-    from osmquadtree_depreceated_spark.gate import POLY_LATS, POLY_LONS
-    from osmquadtree_depreceated_spark.sources.poly import poly_tile_filter
-
-    region = PolyRegion(polys=[(list(POLY_LONS), list(POLY_LATS))])
-    cells = [(((k * 2654435761) % (1 << 36)) << 27) | 18
-             for k in range(40)]
-    df = spark.createDataFrame([(c,) for c in cells], ["cell"])
-    inter = {r.cell for r in poly_tile_filter(df, region).collect()}
-    cont = {r.cell for r in poly_tile_filter(
-        df, region, mode="contains").collect()}
-    assert cont <= inter  # contains implies intersects
+        assert got[c] == _scalar_tile_tests(region, c), hex(c)
+    # contains implies intersects
+    assert all(inter for inter, cont in got.values() if cont)
 
 
 def test_region_filter_envelope_pushdown(spark, tmp_path):
@@ -141,3 +126,108 @@ def test_region_filter_envelope_pushdown(spark, tmp_path):
     # bound, which proves the prefilter reached the scan without
     # depending on where the truncation lands)
     assert f"GreaterThanOrEqual(lon,{ex0})" in scan[0]
+    # the whole multi-section region is ONE Python stage
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+# ------------------------------------------- adversarial membership cases
+# Boundary points are where a second copy of the membership rule would
+# drift: pnpoly's half-open crossing test decides them, so the engine must
+# agree with the scalar port point by point, not just on random interiors.
+
+_OUTER = ([0, 1000, 1000, 0], [0, 0, 1000, 1000])
+# shares the outer square's left edge x = 0
+_TOUCHING_HOLE = ([0, 400, 400, 0], [400, 400, 600, 600])
+_TRIANGLE = ([2000, 3000, 2000], [0, 0, 1000])
+
+_REGIONS = {
+    "outer_minus_touching_hole": PolyRegion(
+        polys=[_OUTER], holes=[_TOUCHING_HOLE]),
+    "two_outers_one_hole": PolyRegion(
+        polys=[_OUTER, _TRIANGLE], holes=[_TOUCHING_HOLE]),
+    "holes_only": PolyRegion(holes=[_OUTER, _TOUCHING_HOLE]),
+    "no_sections": PolyRegion(),
+}
+
+
+def _boundary_points():
+    # every vertex (and its four unit neighbours), every edge midpoint —
+    # horizontal, vertical and diagonal — and a point inside the hole
+    pts = {(200, 500), (700, 700), (-5, 500), (5000, 5000)}
+    for lons, lats in (_OUTER, _TOUCHING_HOLE, _TRIANGLE):
+        n = len(lons)
+        for i in range(n):
+            x, y = lons[i], lats[i]
+            pts |= {(x, y), (x - 1, y), (x + 1, y), (x, y - 1), (x, y + 1)}
+            x2, y2 = lons[(i + 1) % n], lats[(i + 1) % n]
+            pts.add(((x + x2) // 2, (y + y2) // 2))
+    return sorted(pts)
+
+
+@pytest.mark.parametrize("name", sorted(_REGIONS))
+def test_region_filter_boundary_points_match_scalar(spark, name):
+    region = _REGIONS[name]
+    pts = _boundary_points()
+    df = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pts)],
+        ["node_id", "lon", "lat"],
+    )
+    got = {r.node_id for r in
+           poly_region_filter(df, region).select("node_id").collect()}
+    want = {i for i, (x, y) in enumerate(pts)
+            if _scalar_member(region, x, y)}
+    assert got == want
+    if region.polys:
+        # the on-edge/on-vertex set really splits both ways
+        assert want and len(want) < len(pts)
+        # the hole interior touching the outer edge is excluded
+        assert pts.index((200, 500)) not in got
+    else:
+        # no outer section: nothing kept, and no envelope prefilter (the
+        # inverted seed envelope would be a contradiction, not a prune)
+        assert got == set()
+        assert ">=" not in str(region_pred_column(region))
+
+
+def _cell_regions(cell):
+    # regions built from the cell's buffered bounds, so tile corners land
+    # exactly on section vertices and edges
+    mnx, mny, mxx, mxy = SR.cell_bounds(cell, 0.05)
+    w = mxx - mnx
+    midx, midy = (mnx + mxx) // 2, (mny + mxy) // 2
+    rect = ([mnx, mxx, mxx, mnx], [mny, mny, mxy, mxy])
+    around = ([mnx - 1, mxx + 1, mxx + 1, mnx - 1],
+              [mny - 1, mny - 1, mxy + 1, mxy + 1])
+    wide = ([mnx, mxx + w, mxx + w, mnx], [mny, mny, mxy, mxy])
+    # a hole on the wide outer's left edge, reaching the cell's corner
+    corner_hole = ([mnx, midx, midx, mnx], [midy, midy, mxy, mxy])
+    return {
+        "cell_rect": PolyRegion(polys=[rect]),
+        "around_cell": PolyRegion(polys=[around]),
+        "wide_minus_corner_hole": PolyRegion(polys=[wide],
+                                             holes=[corner_hole]),
+        "around_minus_vertex_hole": PolyRegion(polys=[around],
+                                               holes=[rect]),
+        "holes_only": PolyRegion(holes=[rect]),
+        "no_sections": PolyRegion(),
+    }
+
+
+_BASE_CELLS = [int(c) for c in point_cells_closed_form(
+    np.array([0, 4_000_000, -1_000_000]),
+    np.array([505_000_000, 510_000_000, 500_000_000]), 12)]
+
+
+@pytest.mark.parametrize("name", sorted(_cell_regions(_BASE_CELLS[0])))
+def test_tile_tests_boundary_cells_match_scalar(spark, name):
+    region = _cell_regions(_BASE_CELLS[0])[name]
+    cells = _BASE_CELLS + [(((k * 2654435761) % (1 << 36)) << 27) | 18
+                           for k in range(10)]
+    got = _tile_tests(spark, region, cells)
+    for c in cells:
+        assert got[c] == _scalar_tile_tests(region, c), hex(c)
+    if name == "around_cell":
+        assert got[_BASE_CELLS[0]] == (True, True)
+    if not region.polys:
+        # the inverted envelope: no tile intersects, none is contained
+        assert not any(i or c for i, c in got.values())
